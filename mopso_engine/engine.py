@@ -9,8 +9,14 @@ partials → collect → driver merge (Spark_MOPSO_Avg.scala:197-302).
 Scale notes:
 * the points table is scanned once per iteration, from cache, with zero
   data shuffle (only S·num_batches partial-agg rows move);
-* the kNN precompute (the only quadratic step) runs ONCE per fit and has
-  'partition_local' and 'lsh' backends for the 100 TB path;
+* the kNN precompute runs ONCE per fit as an exact pruned search
+  (objectives._topl_blocked): a row is ranked only against reference rows
+  whose distance to its block's bounding box is within the block's
+  provisional L-th distance plus the gemm form's error margin, so the
+  neighbor sets are the all-pairs ranking's. Data that does not prune
+  (wide d) still costs a quadratic scan per partition ('partition_local')
+  or against the broadcast table ('exact'); 'lsh' is the approximate
+  100 TB backend;
 * swarm/archive state is O(S·k·d) doubles — never leaves the driver.
 """
 
@@ -163,12 +169,44 @@ class MopsoEngine:
         iterations — each unproductive iteration still costs a full
         distributed fitness pass, so on converged corpora this saves
         real cluster time. The truncated run equals the prefix of the
-        full run exactly (the loop has no lookahead)."""
+        full run exactly (the loop has no lookahead).
+
+        The fit persists its points and neighbor tables; they are
+        released when it returns and also when it raises."""
+        held: list[DataFrame] = []
+        try:
+            return self._fit(
+                points,
+                held,
+                checkpoint_dir=checkpoint_dir,
+                checkpoint_every=checkpoint_every,
+                resume=resume,
+                stop_after=stop_after,
+                early_stop_patience=early_stop_patience,
+            )
+        finally:
+            for df in held:
+                df.unpersist()
+
+    def _fit(
+        self,
+        points: DataFrame,
+        held: list[DataFrame],
+        *,
+        checkpoint_dir: str | None,
+        checkpoint_every: int,
+        resume: bool,
+        stop_after: int | None,
+        early_stop_patience: int | None,
+    ) -> MopsoResult:
+        """The body of :meth:`fit`; every DataFrame it persists goes into
+        ``held`` for the caller to release."""
         cfg = self.cfg
         rng = np.random.default_rng(cfg.seed)
         t0 = time.time()
 
         pts = points.select("id", "features", "label").persist()
+        held.append(pts)
         # ONE fused stats job (count + distinct-label + per-dim bounds):
         # see init.corpus_stats — three fewer full scans than r5's fit
         n, d, k, bounds = init_mod.corpus_stats(pts, cfg.k)
@@ -221,6 +259,7 @@ class MopsoEngine:
                 # the reference's own cluster-scale semantics
                 knn_mode = "partition_local"
         nbr = with_neighbors(pts_k, cfg.knn_l, mode=knn_mode, n_rows=n).persist()
+        held.append(nbr)
         part_weighted = cfg.fitness_mode == "partition_local"
 
         archive = Archive(
@@ -419,8 +458,6 @@ class MopsoEngine:
             # knee: min normalized L2 to the ideal point
             best_idx = int(np.argmin((norm**2).sum(axis=1)))
 
-        nbr.unpersist()
-        pts.unpersist()
         t_end = time.time()
         phases = {
             "setup": round(t_setup_end - t0, 3),

@@ -69,15 +69,3 @@ def euclidean_expr(a: str | Column, b: str | Column, dim: int | None = None) -> 
         F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v)
     )
 
-
-def weighted_euclidean_expr(a: str | Column, b: str | Column) -> Column:
-    """F2 ('sum' weight variant) as a pure expression."""
-    total = F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y) * x),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        / total
-    )

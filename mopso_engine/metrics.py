@@ -93,16 +93,6 @@ def purity_accuracy(assigned_with_labels: DataFrame, n_total: int, k: int) -> tu
     return acc, distinct == k
 
 
-def accuracy_rate(assigned_with_labels: DataFrame) -> float:
-    """A10: #(label == cluster)/N — meaningful when cluster ids align with
-    labels (getAccuracyRate, Spark_MOPSO_Avg.scala:543-554)."""
-    return (
-        assigned_with_labels.agg(
-            F.avg((F.col("label") == F.col("cluster")).cast("double")).alias("acc")
-        ).collect()[0]["acc"]
-    )
-
-
 def inertia(assigned: DataFrame) -> float:
     """A13: Σ dist² (calInertia, Spark_MOPSO_Avg.scala:1351-1364)."""
     return assigned.agg(F.sum(F.col("dist") * F.col("dist")).alias("sse")).collect()[0]["sse"]

@@ -15,11 +15,19 @@ all S candidate solutions in a single Arrow-vectorized pass + one tiny
 partial/final aggregation (S rows out). The reference instead re-scans
 per particle per iteration (Spark_MOPSO_Avg.scala:211-228).
 
-Scale: the exact kNN is the only O(N²) corner (SURVEY §7.4.1). Three
-backends: 'exact' (broadcast block-cdist — to ~10⁵ rows),
-'partition_local' (the reference Avg semantics — embarrassingly
-parallel, exactly what it did at cluster scale), and 'lsh'
-(BucketedRandomProjectionLSH approxSimilarityJoin — the 100 TB path).
+Scale: the kNN precompute is the one step that is quadratic in the worst
+case (SURVEY §7.4.1). Its kernel, ``_topl_blocked``, is an exact pruned
+search: Morton-ordered query blocks rank only the reference rows whose
+squared distance to the block's bounding box is within the block's
+provisional L-th distance² (plus a margin covering the gemm form's
+rounding), so it returns the all-pairs (distance, id) ranking while
+computing a fraction of the pairs on low-d data; a probe block sends
+data that will not prune (wide d) straight to the all-pairs scan. Three
+backends:
+'exact' (a broadcast reference — to ~10⁵ rows), 'partition_local' (the
+reference Avg semantics — embarrassingly parallel, exactly what it did
+at cluster scale), and 'lsh' (BucketedRandomProjectionLSH candidates —
+the approximate 100 TB path).
 """
 
 from __future__ import annotations
@@ -55,12 +63,119 @@ from mopso_engine.assign import _distances
 #: change any value (per-row distances and top-L are row-independent).
 _BLOCK_CELLS = 262_144
 #: block cap for the exact Σ(x−y)² path (dist_fn given): that formula
-#: materializes a (block, n_ref, d) DIFFERENCE tensor, so cells here are
-#: divided by n_ref·d — keeping the old 4M (32 MB tensor) avoids
+#: materializes a (block, n_cand, d) DIFFERENCE tensor, so cells here are
+#: divided by n_cand·d — keeping the old 4M (32 MB tensor) avoids
 #: degenerating to 1-row blocks (per-block Python overhead × n rows) on
 #: wide-d reference sets; the tensor is touched once, so the bandwidth
 #: argument above does not apply to it.
 _BLOCK_CELLS_EXACT = 4_000_000
+#: pruned kNN search (``_topl_blocked``): query rows per block (one
+#: bounding box and one candidate set each; also the size of the probe
+#: block that decides whether to prune at all, and the largest batch
+#: that never prunes), reference rows per chunk (one bounding box each),
+#: and reference rows in each query's provisional Morton-adjacent window
+_QUERY_BLOCK = 32
+_REF_CHUNK = 32
+_WINDOW = 32
+#: most reference rows the probe block's box is tested against
+_PROBE_SAMPLE = 256
+
+
+def _morton(ref: np.ndarray):
+    """Morton (Z-order) codes on one grid whose cell width is the same in
+    every dimension, set by the widest spread of ref: anisotropic data then
+    sorts on its wide axis first, isotropic data gets a true Z-order. At
+    most 63 code bits: 15 per dimension at d=4, 2 per dimension over the
+    31 widest dimensions at d=64. Returns ref's codes, the bit count and
+    the code function for other rows."""
+    lo = ref.min(axis=0)
+    spread = ref.max(axis=0) - lo
+    bits = min(31, max(2, 63 // ref.shape[1]))
+    dims = np.argsort(-spread, kind="stable")[: 63 // bits]
+    top = (1 << bits) - 1
+    scale = top / spread.max() if spread.max() > 0 else 0.0
+    weights = np.int64(1) << np.arange(len(dims) - 1, -1, -1, dtype=np.int64)
+
+    def code(a: np.ndarray) -> np.ndarray:
+        f = (a[:, dims] - lo[dims]) * scale
+        q = np.clip(f, 0, top, out=f).astype(np.int64)
+        c = np.zeros(len(a), dtype=np.int64)
+        for b in range(bits - 1, -1, -1):
+            c = (c << len(dims)) | (((q >> b) & 1) @ weights)
+        return c
+
+    return code(ref), bits * len(dims), code
+
+
+def _trie_blocks(codes: np.ndarray, cap: int, nbits: int) -> np.ndarray:
+    """Cut sorted Morton codes into runs of at most ``cap`` rows, each the
+    rows under one node of the code trie (so each run is one grid box,
+    not a Z-curve segment that jumps across the space), then merge
+    neighbouring runs while they fit in ``cap``. Returns run offsets
+    including the final end."""
+    starts: list[int] = []
+    stack = [(0, len(codes), nbits - 1)]
+    while stack:
+        lo, hi, bit = stack.pop()
+        if hi - lo <= cap or bit < 0:
+            starts.extend(range(lo, hi, cap))  # bit < 0: identical codes
+            continue
+        split = ((int(codes[lo]) >> (bit + 1)) << (bit + 1)) | (1 << bit)
+        mid = lo + int(np.searchsorted(codes[lo:hi], split))
+        if mid < hi:
+            stack.append((mid, hi, bit - 1))
+        if mid > lo:
+            stack.append((lo, mid, bit - 1))
+    starts.sort()
+    merged = [0]
+    for s, e in zip(starts[1:], starts[2:] + [len(codes)]):
+        if e - merged[-1] > cap:
+            merged.append(s)
+    merged.append(len(codes))
+    return np.array(merged, dtype=np.int64)
+
+
+def _rank_rows(q, cref, cids, cself, l_eff, dist_fn, cells):
+    """Top-L of each row of q among the rows of cref by (distance, id),
+    in row blocks of at most ``cells`` scratch cells; ``cself`` is each
+    row's own position in cref (-1 = absent), excluded. An argpartition
+    picks each row's top L; rows with a tie at the boundary are re-ranked
+    by a full (distance, id) sort."""
+    pos = np.empty((len(q), l_eff), dtype=np.int64)
+    dist = np.empty((len(q), l_eff), dtype=np.float64)
+    step = max(1, cells // len(cref))
+    for s in range(0, len(q), step):
+        dm = dist_fn(q[s : s + step], cref)
+        cs = cself[s : s + step]
+        hit = np.flatnonzero(cs >= 0)
+        dm[hit, cs[hit]] = np.inf
+        if dm.shape[1] == l_eff:
+            part = np.broadcast_to(np.arange(l_eff), dm.shape)
+            pd_d = dm
+        else:
+            part = np.argpartition(dm, l_eff, axis=1)
+            nxt = np.take_along_axis(dm, part[:, l_eff : l_eff + 1], axis=1)[:, 0]
+            part = part[:, :l_eff]
+            pd_d = np.take_along_axis(dm, part, axis=1)
+            for i in np.flatnonzero(~(pd_d.max(axis=1) < nxt)):
+                part[i] = np.lexsort((cids, dm[i]))[:l_eff]
+                pd_d[i] = dm[i, part[i]]
+        order = np.lexsort((cids[part], pd_d), axis=1)
+        pos[s : s + step] = np.take_along_axis(part, order, axis=1)
+        dist[s : s + step] = np.take_along_axis(pd_d, order, axis=1)
+    return pos, dist
+
+
+def _sq_dist(y: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """Squared distance of each row of y to the point p."""
+    diff = y - p
+    return np.einsum("ij,ij->i", diff, diff)
+
+
+def _box_gap2(y: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Squared distance of each row of y to the box [lo, hi]."""
+    gap = np.maximum(np.maximum(y - hi, lo - y), 0.0)
+    return np.einsum("ij,ij->i", gap, gap)
 
 
 def _topl_blocked(
@@ -72,37 +187,127 @@ def _topl_blocked(
     *,
     dist_fn=None,
 ):
-    """Top-L neighbors of each row of x against ref, computed in row blocks
-    so the (rows × |ref|) distance matrix never exceeds ~32 MB. Rows whose
-    id appears in ref exclude themselves. Returns (nbr_pos, nbr_dist) of
-    shape (len(x), l_eff). ``dist_fn`` defaults to the BLAS gemm form;
-    pass assign._distances_exact when ranks must reproduce a SQL oracle's
-    Σ(x−y)² distances bit-for-bit."""
-    n_ref = ref.shape[0]
+    """Top-L neighbors of each row of x against ref (ids sorted), ranked
+    by (distance, neighbor id). Rows whose id appears in ref exclude
+    themselves. Returns (nbr_pos, nbr_dist) of shape (len(x), l_eff).
+    ``dist_fn`` defaults to the BLAS gemm form; pass
+    assign._distances_exact when ranks must reproduce a SQL oracle's
+    Σ(x−y)² distances bit-for-bit.
+
+    Exact pruned search instead of an all-pairs scan, chosen up front by a
+    probe: the bounding box of x[0] and its 31 nearest rows of x, and
+    about x[0]'s L-th distance to ref, both tested against a strided
+    sample of 256 ref rows. If over half of the sample lies within that
+    distance of the box, the data will not prune (wide d) and every row
+    is ranked against all of ref, which costs the scan plus
+    O((|x| + 256)·d) for the probe. Batches of at most 32 rows, too few
+    to pay for ordering ref, and non-finite input rank against all of ref
+    too. Otherwise ``_topl_pruned`` ranks them; its candidate bound
+    carries the gemm form's error margin, so the result is the all-pairs
+    (distance, id) ranking either way. Distance matrices stay within
+    ``_BLOCK_CELLS`` (gemm form) or ``_BLOCK_CELLS_EXACT`` (exact form)
+    cells."""
+    n_ref, d = ref.shape
     l_eff = min(l_nbrs, n_ref - 1)
-    if dist_fn is None:
-        dist_fn = _distances
-        block = max(1, _BLOCK_CELLS // max(1, n_ref))
-    else:
-        # the exact Σ(x−y)² formula materializes a (block, n_ref, d)
-        # difference tensor — size the block so THAT stays ~32 MB, not
-        # just the (block, n_ref) output matrix
-        block = max(1, _BLOCK_CELLS_EXACT // max(1, n_ref * ref.shape[1]))
-    out_pos = np.empty((len(x), l_eff), dtype=np.int64)
-    out_d = np.empty((len(x), l_eff), dtype=np.float64)
-    for s in range(0, len(x), block):
-        e = min(s + block, len(x))
-        d = dist_fn(x[s:e], ref)
-        pos = np.searchsorted(ref_ids, x_ids[s:e])
-        pos = np.clip(pos, 0, n_ref - 1)
-        hit = ref_ids[pos] == x_ids[s:e]
-        d[np.arange(e - s)[hit], pos[hit]] = np.inf
-        part = np.argpartition(d, l_eff - 1, axis=1)[:, :l_eff]
-        pd_d = np.take_along_axis(d, part, axis=1)
-        order = np.lexsort((ref_ids[part], pd_d), axis=1)
-        out_pos[s:e] = np.take_along_axis(part, order, axis=1)
-        out_d[s:e] = np.take_along_axis(pd_d, order, axis=1)
-    return out_pos, out_d
+    dist_fn = dist_fn or _distances
+    # the exact Σ(x−y)² formula materializes a (rows, n_cand, d)
+    # difference tensor — cap THAT, not just the (rows, n_cand) output
+    cells = _BLOCK_CELLS if dist_fn is _distances else _BLOCK_CELLS_EXACT // max(1, d)
+    if len(x) == 0 or l_eff == 0:
+        return np.empty((len(x), l_eff), dtype=np.int64), np.empty((len(x), l_eff))
+    pos = np.clip(np.searchsorted(ref_ids, x_ids), 0, n_ref - 1)
+    self_pos = np.where(ref_ids[pos] == x_ids, pos, -1)
+
+    if len(x) <= _QUERY_BLOCK:
+        return _rank_rows(x, ref, ref_ids, self_pos, l_eff, dist_fn, cells)
+    # probe: prune only if at most half of a strided sample of ref lies
+    # within r of the box around x[0] and its 31 nearest rows of x, where
+    # r (about x[0]'s L-th distance in ref) is its distance to its
+    # (L·|sample|/|ref|)-th nearest sample row
+    sidx = np.arange(0, n_ref, -(-n_ref // _PROBE_SAMPLE))
+    sample = ref[sidx]
+    d0 = _sq_dist(sample, x[0])
+    d0[sidx == self_pos[0]] = np.inf
+    kth = max(1, l_eff * len(sidx) // n_ref)
+    box = x[np.argpartition(_sq_dist(x, x[0]), _QUERY_BLOCK - 1)[:_QUERY_BLOCK]]
+    near = _box_gap2(sample, box.min(axis=0), box.max(axis=0)) <= np.partition(d0, kth - 1)[kth - 1]
+    if np.count_nonzero(near) <= len(sample) // 2:
+        margin = (4 * d + 16) * np.finfo(np.float64).eps * (
+            np.einsum("ij,ij->i", x, x).max() + np.einsum("ij,ij->i", ref, ref).max()
+        )
+        if np.isfinite(margin) and np.isfinite(x).all() and np.isfinite(ref).all():
+            return _topl_pruned(x, ref, ref_ids, self_pos, l_eff, dist_fn, cells, margin)
+    return _rank_rows(x, ref, ref_ids, self_pos, l_eff, dist_fn, cells)
+
+
+def _topl_pruned(x, ref, ref_ids, self_pos, l_eff, dist_fn, cells, margin):
+    """``_rank_rows(x, ref, ...)`` by a pruned search. Rows of x and ref
+    are sorted by Morton code and x is cut into blocks of ≤ 32 rows that
+    each sit in one grid box. Each row's provisional squared radius r² is
+    its L-th Σ(x−y)² among the 32 ref rows around its Morton position.
+    Only ref rows whose squared distance to the block's bounding box is at
+    most the block's largest r²·(1+1e-9) + 2·margin are ranked with
+    ``dist_fn``. margin = (4d+16)·eps·(max‖x‖² + max‖ref‖²) is at least
+    twice the absolute error of the gemm form, whose ‖x‖² − 2x·y + ‖y‖²
+    carries about (2d+4)·eps·(‖x‖² + ‖y‖²); the Σ(x−y)² form's error is
+    relative and sits far inside the 1e-9. So no ref row whose
+    ``dist_fn`` distance could rank in the top L is skipped, ties
+    included. The bound work is O(rows·(32 + chunks)·d)."""
+    n_ref, d = ref.shape
+    rcode, nbits, code = _morton(ref)
+    # a query that is a ref row shares its code
+    xcode = rcode[self_pos] if (self_pos >= 0).all() else code(x)
+    rperm = np.argsort(rcode, kind="stable")
+    rs, rids, rcode = ref[rperm], ref_ids[rperm], rcode[rperm]
+    rinv = np.empty(n_ref, dtype=np.int64)
+    rinv[rperm] = np.arange(n_ref)
+    xperm = np.argsort(xcode, kind="stable")
+    xs, xcode = x[xperm], xcode[xperm]
+    sm = np.where(self_pos[xperm] >= 0, rinv[self_pos[xperm]], -1)
+    cb = _trie_blocks(rcode, _REF_CHUNK, nbits)
+    cstart, clen = cb[:-1], np.diff(cb)
+    clo = np.minimum.reduceat(rs, cstart, axis=0)
+    chi = np.maximum.reduceat(rs, cstart, axis=0)
+    qb = _trie_blocks(xcode, _QUERY_BLOCK, nbits)
+    w = min(n_ref, max(_WINDOW, 2 * (l_eff + 1)))
+    # query blocks bounded together: their window distances and the
+    # block × chunk gap tensor each stay within _BLOCK_CELLS
+    g = max(1, min(_BLOCK_CELLS // (len(cstart) * d), _BLOCK_CELLS // (_QUERY_BLOCK * w)))
+    pos = np.empty((len(x), l_eff), dtype=np.int64)
+    dist = np.empty((len(x), l_eff), dtype=np.float64)
+    for b0 in range(0, len(qb) - 1, g):
+        bq = qb[b0 : b0 + g + 1]
+        q, qsm = xs[bq[0] : bq[-1]], sm[bq[0] : bq[-1]]
+        # provisional radius: each row's L-th distance among the w ref
+        # rows around its own Morton position
+        w0 = np.where(qsm >= 0, qsm, np.searchsorted(rcode, xcode[bq[0] : bq[-1]]))
+        w0 = np.clip(w0 - w // 2, 0, n_ref - w)
+        dw = np.empty((len(q), w))
+        for o in range(w):
+            diff = q - rs[w0 + o]
+            dw[:, o] = np.einsum("ij,ij->i", diff, diff)
+        own = np.flatnonzero((qsm >= w0) & (qsm < w0 + w))
+        dw[own, qsm[own] - w0[own]] = np.inf
+        thr = np.partition(dw, l_eff - 1, axis=1)[:, l_eff - 1] * (1.0 + 1e-9) + 2.0 * margin
+        # candidate chunks: box-to-box lower bound per block
+        blo = np.minimum.reduceat(q, bq[:-1] - bq[0], axis=0)
+        bhi = np.maximum.reduceat(q, bq[:-1] - bq[0], axis=0)
+        bthr = np.maximum.reduceat(thr, bq[:-1] - bq[0])
+        gap = np.maximum(np.maximum(clo - bhi[:, None], blo[:, None] - chi), 0.0)
+        keep = np.einsum("bcd,bcd->bc", gap, gap) <= bthr[:, None]
+        for b, (s, e) in enumerate(zip(bq[:-1], bq[1:])):
+            kc = np.flatnonzero(keep[b])
+            lens = clen[kc]
+            # candidate rows: the kept chunks, then the row-level box bound
+            cand = np.repeat(cstart[kc] - np.cumsum(lens) + lens, lens) + np.arange(lens.sum())
+            y = rs[cand]
+            near = _box_gap2(y, blo[b], bhi[b]) <= bthr[b]
+            cand, y = cand[near], y[near]
+            j = np.clip(np.searchsorted(cand, sm[s:e]), 0, len(cand) - 1)
+            cself = np.where(cand[j] == sm[s:e], j, -1)
+            p, dd = _rank_rows(xs[s:e], y, rids[cand], cself, l_eff, dist_fn, cells)
+            pos[xperm[s:e]], dist[xperm[s:e]] = rperm[cand[p]], dd
+    return pos, dist
 
 
 #: (id, label, self_nbr_flat, nbr_n): self + L neighbor vectors packed in
@@ -216,10 +421,14 @@ def knn_pairs_partition_local(points: DataFrame, l_nbrs: int) -> DataFrame:
     per-partition concat, same sorted-ref ``_topl_blocked`` call, same
     default distance math, so it reproduces the fit kernel's neighbor
     sets and ranks EXACTLY for any points table laid out the way the fit
-    laid it out. No collect, no broadcast, no shuffle — the rescore path
-    for fits beyond ``MAX_EXACT_KNN_ROWS`` (layout is semantics here:
-    callers must pass the same deterministic layout the engine built,
-    see ``MopsoEngine.fit``)."""
+    laid it out. ``_topl_blocked`` prunes with box lower bounds plus the
+    gemm form's error margin, so its (distance, id) ranking is the
+    all-pairs one; ``nbr_dist`` can differ from an all-pairs gemm in the
+    last bits, since BLAS rounding depends on the product's shape. No
+    collect, no broadcast, no shuffle — the rescore path for fits beyond
+    ``MAX_EXACT_KNN_ROWS`` (layout is semantics here: callers must pass
+    the same deterministic layout the engine built, see
+    ``MopsoEngine.fit``)."""
 
     def kernel(batches: Iterable[pd.DataFrame]):
         chunks = list(batches)

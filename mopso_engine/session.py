@@ -27,8 +27,8 @@ def build_session(
     * ``spark.sql.shuffle.partitions`` — upper bound ≈ 2-3× total cores
       locally; on a cluster, ≈ 2× total executor cores (AQE coalesces down).
     * ``spark.sql.files.maxPartitionBytes`` 128m — scan partitions sized so
-      a row batch plus the fitness kernel's scratch (~32 MB blocked
-      distance matrix, see objectives._BLOCK_CELLS) fits executor memory.
+      a row batch plus the kernels' scratch (2 MB distance-matrix blocks,
+      see objectives._BLOCK_CELLS) fits executor memory.
     * Arrow batch 8192 — the pandas-UDF kernels vectorize well past 2k
       rows; larger batches just raise peak memory.
     * runtime bloom-filter join pruning — when a fact⋈fact join's build

@@ -282,3 +282,27 @@ def test_early_stop_streak_survives_resume(blobs_df, tmp_path, monkeypatch):
         blobs_df, checkpoint_dir=cp, resume=True, early_stop_patience=2
     )
     assert resumed.iterations == 5  # not 6: the pre-interrupt streak counted
+
+
+def test_fit_releases_persisted_tables_when_it_raises(spark, blobs_df, monkeypatch):
+    """fit persists its points and neighbor tables; a fit that raises
+    part-way must still unpersist both."""
+    import mopso_engine.engine as eng_mod
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    blobs_df.count()  # the session fixture's own cache is not the fit's
+    before = persisted()
+    held_during_fit = []
+
+    def failing_fitness(nbr, positions, **kw):
+        held_during_fit.append(persisted() - before)
+        raise RuntimeError("fitness pass failed")
+
+    monkeypatch.setattr(eng_mod, "evaluate_solutions", failing_fitness)
+    cfg = MopsoConfig(n_particles=4, iter_max=2, knn_l=5, seed=3, init_sample_size=300)
+    with pytest.raises(RuntimeError, match="fitness pass failed"):
+        MopsoEngine(cfg).fit(blobs_df)
+    assert len(held_during_fit[0]) >= 2  # points + neighbor tables were cached
+    assert persisted() == before

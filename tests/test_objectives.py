@@ -2,8 +2,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mopso_engine.assign import assign
+from mopso_engine.assign import _distances, _distances_exact, assign
 from mopso_engine.objectives import (
+    _topl_blocked,
     conn_df,
     dev_of,
     evaluate_solutions,
@@ -11,15 +12,152 @@ from mopso_engine.objectives import (
     knn_pairs_exact,
     with_neighbors,
 )
-from tests.conftest import oracle_assign, oracle_conn
+from tests.conftest import make_blobs, oracle_assign, oracle_conn
 
 L = 10
 
 
-def test_knn_exact_matches_crossjoin(blobs_df):
-    a = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_exact(blobs_df, L).collect()}
-    b = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_crossjoin(blobs_df, L).collect()}
-    assert a == b
+def _tied_grid() -> np.ndarray:
+    """A 5×5×5 integer grid with every point twice: every row has many
+    neighbors tied at its L-th distance, and integer coordinates make the
+    gemm and Σ(x−y)² distances exact."""
+    g = np.stack(np.meshgrid(*[np.arange(5.0)] * 3, indexing="ij"), axis=-1).reshape(-1, 3)
+    return np.concatenate([g, g])
+
+
+@pytest.fixture(scope="module")
+def tied_grid_df(spark):
+    rows = [(i, [float(v) for v in xi], 1) for i, xi in enumerate(_tied_grid())]
+    return spark.createDataFrame(rows, "id long, features array<double>, label int")
+
+
+def test_knn_exact_matches_crossjoin(blobs_df, tied_grid_df):
+    """Both renderings rank by (distance, neighbor id), boundary ties
+    included: on the tied grid an argpartition that keeps whichever tied
+    rows it meets first disagrees with the window on most rows."""
+    for df in (blobs_df, tied_grid_df):
+        a = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_exact(df, L).collect()}
+        b = {(r["id"], r["rank"]): r["nbr_id"] for r in knn_pairs_crossjoin(df, L).collect()}
+        assert a == b
+
+
+def _lexsort_topl(x, ref, ref_ids, x_ids, l_nbrs, dist_fn=_distances):
+    """Test-only all-pairs reference for ``_topl_blocked``: each query's
+    whole distance row, itself excluded, then a full (distance, id)
+    lexsort."""
+    l_eff = min(l_nbrs, len(ref) - 1)
+    pos = np.empty((len(x), l_eff), dtype=np.int64)
+    dist = np.empty((len(x), l_eff))
+    for i in range(len(x)):
+        d = dist_fn(x[i : i + 1], ref)[0]
+        d[ref_ids == x_ids[i]] = np.inf
+        pos[i] = np.lexsort((ref_ids, d))[:l_eff]
+        dist[i] = d[pos[i]]
+    return pos, dist
+
+
+def _dyadic_blobs(n, d, k, seed):
+    """Blobs rounded to multiples of 1/64: every product and sum in either
+    distance form is exact, so the pruned search and the all-pairs
+    reference must agree bit-for-bit, distances included (on arbitrary
+    doubles the gemm form's last bits depend on the BLAS blocking of
+    the product's shape)."""
+    _, x, _, _ = make_blobs(n=n, d=d, k=k, seed=seed, spread=1.0)
+    return np.round(x * 64) / 64
+
+
+def _assert_same_topl(x, ref, ref_ids, x_ids, l_nbrs, dist_fn=None):
+    got = _topl_blocked(x, ref, ref_ids, x_ids, l_nbrs, dist_fn=dist_fn)
+    want = _lexsort_topl(x, ref, ref_ids, x_ids, l_nbrs, dist_fn or _distances)
+    np.testing.assert_array_equal(got[0], want[0])
+    np.testing.assert_array_equal(got[1], want[1])
+
+
+@pytest.fixture
+def pruned_calls(monkeypatch):
+    """Query-row count of each ``_topl_pruned`` call, i.e. each
+    ``_topl_blocked`` call whose probe block chose the pruned search."""
+    import mopso_engine.objectives as objectives
+
+    calls = []
+    real = objectives._topl_pruned
+
+    def spy(x, *args):
+        calls.append(len(x))
+        return real(x, *args)
+
+    monkeypatch.setattr(objectives, "_topl_pruned", spy)
+    return calls
+
+
+def test_topl_partition_local_layout_matches_lexsort(pruned_calls):
+    """A small copy of the partition-local benchmark layout: d=4 blobs,
+    4 hash-by-id partitions, each ranked against itself sorted by id."""
+    x = _dyadic_blobs(6000, 4, 4, seed=3)
+    ids = np.arange(len(x), dtype=np.int64)
+    part = np.random.default_rng(3).integers(0, 4, len(x))
+    for p in range(4):
+        xp, ip = x[part == p], ids[part == p]
+        order = np.argsort(ip)
+        _assert_same_topl(xp, xp[order], ip[order], ip, 5)
+    assert len(pruned_calls) == 4
+
+
+@pytest.mark.parametrize("dist_fn", [None, _distances_exact])
+def test_topl_broadcast_batches_match_lexsort(dist_fn, pruned_calls):
+    """d=19 query batches against the whole broadcast reference, with
+    both distance forms."""
+    x = _dyadic_blobs(800, 19, 7, seed=5)
+    ids = np.arange(len(x), dtype=np.int64)
+    perm = np.random.default_rng(5).permutation(len(x))
+    for s in range(0, len(x), 200):
+        batch = perm[s : s + 200]
+        _assert_same_topl(x[batch], x, ids, ids[batch], L, dist_fn)
+    assert pruned_calls  # the probe's choice is per batch; some prune
+
+
+def test_topl_queries_outside_reference_match_lexsort():
+    """Queries that are not reference rows exclude nothing."""
+    ref = _dyadic_blobs(600, 4, 3, seed=8)
+    q = _dyadic_blobs(150, 4, 3, seed=9)
+    ref_ids = np.arange(len(ref), dtype=np.int64)
+    _assert_same_topl(q, ref, ref_ids, 10_000 + np.arange(len(q)), L)
+
+
+@pytest.mark.parametrize("n_ref", [2, L + 1])
+def test_topl_tiny_reference_matches_lexsort(n_ref):
+    ref = _dyadic_blobs(n_ref, 4, 2, seed=n_ref)
+    ids = np.arange(n_ref, dtype=np.int64) * 3
+    _assert_same_topl(ref[::-1], ref, ids, ids[::-1], L)
+    _assert_same_topl(ref + 0.5, ref, ids, ids + 1, L)
+
+
+def test_topl_ties_match_lexsort():
+    g = _tied_grid()
+    gids = np.arange(len(g), dtype=np.int64)
+    _assert_same_topl(g, g, gids, gids, L)
+    _assert_same_topl(g, g, gids, gids, 1)
+
+
+@pytest.mark.parametrize("n_query", [200, 1500])
+def test_topl_wide_data_ranks_against_whole_reference(n_query, pruned_calls):
+    """d=32 noise does not prune: the probe block sends every query to
+    the all-of-ref ranking, as a broadcast batch and as a partition."""
+    wide = np.round(np.random.default_rng(2).normal(size=(1500, 32)) * 64) / 64
+    wids = np.arange(len(wide), dtype=np.int64)
+    _assert_same_topl(wide[:n_query], wide, wids, wids[:n_query], L)
+    assert pruned_calls == []
+
+
+def test_topl_continuous_blobs_same_neighbors():
+    """On arbitrary doubles the neighbor ids still equal the all-pairs
+    ranking's; distances agree to the gemm form's rounding."""
+    _, x, _, _ = make_blobs(n=3000, d=4, k=4, seed=11, spread=1.0)
+    ids = np.arange(len(x), dtype=np.int64)
+    got = _topl_blocked(x, x, ids, ids, 5)
+    want = _lexsort_topl(x, x, ids, ids, 5)
+    np.testing.assert_array_equal(got[0], want[0])
+    np.testing.assert_allclose(got[1], want[1], rtol=1e-12, atol=1e-12)
 
 
 def test_dev_matches_oracle(blobs_df, blobs):
