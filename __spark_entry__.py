@@ -27,6 +27,7 @@ from mopso_engine.io import points_from_embeddings, read_table
 from mopso_engine import metrics as metrics_mod
 from mopso_engine.objectives import conn_df, knn_pairs_crossjoin
 from mopso_engine.schema import MopsoConfig
+from mopso_engine.scope import track
 from mopso_engine.ext import dedup as dd
 from mopso_engine.ext import simsearch as ss
 from mopso_engine.ext import text as tx
@@ -1785,18 +1786,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from one basket self-join, item supports from one count, the
         rule table = pairs × 2 rows joined to broadcast supports.
         Top-50 by (confidence desc, antecedent, consequent)."""
-        from mopso_engine.ext.graph import _GRAPH_CACHES
-
         li = read_table(spark, sf, "lineitem")
         # persist the deduped basket table for its three consumers (both
         # self-join sides + supports) — the r17 audit showed 5 parquet
-        # scans here; registered in the graph cache registry the bench
-        # clears per query
-        bi = li.select(
+        # scans here; tracked for the runner's query scope
+        bi = track(li.select(
             F.col("l_orderkey").alias("basket"),
             F.col("l_partkey").alias("item"),
-        ).distinct().persist()
-        _GRAPH_CACHES.append(bi)
+        ).distinct().persist())
         a = bi.alias("a")
         b = bi.alias("b")
         pairs = (
@@ -4895,14 +4892,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # persist the decoded feature table for its several consumers
         # (codebook training + the serving/exact arms) — the decode scan
         # then really runs once (r17 audit: it re-ran per consumer);
-        # registered for clear_sim_caches
-        feats = ss.persist_sim(
+        # tracked for the runner's query scope
+        feats = track(
             decode_and_featurize(
                 assets_from_documents(docs), decode="fake", dim=8
             ).select(
                 F.col("asset_id").alias("vec_id"),
                 F.col("features").alias("embedding"),
-            )
+            ).persist()
         )
         cb = ss.train_codebook(
             feats, k=8, iters=2, sample_fraction=0.5, seed=11
@@ -4957,14 +4954,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # persist the decoded feature table for its several consumers
         # (codebook training + the serving/exact arms) — the decode scan
         # then really runs once (r17 audit: it re-ran per consumer);
-        # registered for clear_sim_caches
-        feats = ss.persist_sim(
+        # tracked for the runner's query scope
+        feats = track(
             decode_and_featurize(
                 assets_from_documents(docs), decode="fake", dim=8
             ).select(
                 F.col("asset_id").alias("vec_id"),
                 F.col("features").alias("embedding"),
-            )
+            ).persist()
         )
         cb = ss.train_codebook(
             feats, k=8, iters=2, sample_fraction=0.5, seed=11
@@ -6535,8 +6532,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # events_attribution_markov (output rebuilt as pure literals
         # off the one collected states² table, transition persist
         # released eagerly — ADVICE r15); events_isotonic /
-        # orders_woe_iv (their persisted tiny tables moved to the
-        # renamed _SHARED_TINY_CACHES registry — VERDICT r15 #5)
+        # orders_woe_iv (their persisted tiny tables are released by
+        # the runner's query scope — VERDICT r15 #5)
         dedup_bloom_prefilter, events_attribution_markov,
         events_isotonic, orders_woe_iv,
         # r16-NEW, in-window at birth (the r12-r15 pattern): the
@@ -13172,26 +13169,7 @@ def oracle_sql() -> dict[str, str]:
         run_sf = os.environ.get(
             "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
         )
-        # the recorded trajectories also depend on the fitness kernel's
-        # reduction block size (part of the float-summation grouping):
-        # under an overridden MOPSO_REDUCE_BLOCK_ROWS the hash gates
-        # would fail in the last ulps with no pointer to the cause
-        # (VERDICT r4 #7) — fall back rows-only and say why, loudly.
-        from mopso_engine.objectives import _REDUCE_BLOCK_ROWS as _cur_block
-
-        _rec_block = fit_data.get("reduce_block_rows", 2048)
-        if _rec_block != _cur_block:
-            import sys as _sys
-
-            print(
-                f"[oracle_sql] fit oracles DISABLED: MOPSO_REDUCE_BLOCK_ROWS="
-                f"{_cur_block} != recorded {_rec_block} — seeded fit "
-                "trajectories differ in last ulps under a different block "
-                "size; regenerate with tools/gen_fit_oracle.py or unset the "
-                "env var (falling back to rows-only checks)",
-                file=_sys.stderr,
-            )
-        elif os.path.normpath(run_sf) == os.path.normpath(
+        if os.path.normpath(run_sf) == os.path.normpath(
             fit_data.get("sf_dir", "/root/testdata/sf0.01")
         ):
             o["mopso_fit"] = _fit_oracle_embeddings_sql(fit_data["mopso_fit"], knn_l=5)

@@ -725,12 +725,7 @@ def main() -> None:
     # and the per-entry `rescore` phase in fit_phases now adjudicates it
     # in-artifact.
 
-    from mopso_engine.ext.dedup import clear_bloom_broadcasts, clear_shingle_caches
-    from mopso_engine.ext.calib import clear_calib_caches
-    from mopso_engine.ext.dsir import clear_dsir_caches
-    from mopso_engine.ext.graph import clear_pagerank_caches
-    from mopso_engine.ext.retrieval import clear_retrieval_caches
-    from mopso_engine.ext.simsearch import clear_sim_caches
+    from mopso_engine.scope import PHASES, query_scope
 
     # warm the calibration workloads themselves (BLAS thread pool, the
     # calib job's codegen) so pre vs post measures HOST drift, not the
@@ -755,9 +750,6 @@ def main() -> None:
     # IO) noise; sec/iter inflated = a real kernel regression. The
     # engine-side walls exclude the query wrapper's own read/rescore
     # work, so phases sum to slightly less than the entry timing.
-    from mopso_engine.engine import LAST_FIT_PHASES
-    from mopso_engine.ext.graph import LAST_GRAPH_PHASES
-
     fit_phase_attempts: dict[str, list] = {}
     graph_phase_attempts: dict[str, list] = {}
     #: graph entries whose engine loop reports a setup/blocks
@@ -768,32 +760,24 @@ def main() -> None:
     GRAPH_PHASE_QUERIES = {"supplier_bfs", "supplier_ppr", "supplier_pagerank"}
 
     def note_fit_phases(name: str, t: float) -> None:
-        if name.startswith("mopso_fit") and LAST_FIT_PHASES:
-            fit_phase_attempts.setdefault(name, []).append(
-                (t, dict(LAST_FIT_PHASES))
-            )
-        if name in GRAPH_PHASE_QUERIES and LAST_GRAPH_PHASES:
+        """Record the phases the query left in the scope's PHASES (read
+        after its scope closed)."""
+        if name.startswith("mopso_fit") and PHASES:
+            fit_phase_attempts.setdefault(name, []).append((t, dict(PHASES)))
+        if name in GRAPH_PHASE_QUERIES and PHASES:
             graph_phase_attempts.setdefault(name, []).append(
                 (t, {k: (list(v) if isinstance(v, list) else v)
-                     for k, v in LAST_GRAPH_PHASES.items()})
+                     for k, v in PHASES.items()})
             )
 
     def run_once(name: str) -> float:
         t0 = time.time()
-        try:
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            return round(time.time() - t0, 3)
-        finally:
-            # release query-lifetime executor caches so one query's
-            # storage doesn't leak into the next timing
-            clear_shingle_caches()
-            clear_pagerank_caches()
-            clear_retrieval_caches()
-            clear_dsir_caches()
-            clear_calib_caches()
-            clear_bloom_broadcasts()
-            clear_sim_caches()
+        # the scope releases what the query persisted or broadcast (after
+        # the timing), so one query's storage doesn't leak into the next
+        with query_scope():
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            t = round(time.time() - t0, 3)
+        return t
 
     for qi, name in enumerate(BENCH_QUERIES):
         if qi % CALIB_EVERY == 0:

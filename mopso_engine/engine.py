@@ -36,6 +36,7 @@ from mopso_engine.objectives import evaluate_solutions, with_neighbors
 from mopso_engine.pareto import Archive, ArchiveEntry, normalize_fitness, pbest_update
 from mopso_engine.pso import init_velocity, update_swarm
 from mopso_engine.schema import MopsoConfig
+from mopso_engine.scope import PHASES, query_scope, track
 
 
 @dataclass
@@ -75,13 +76,6 @@ class MopsoResult:
             for i, (f, nf) in enumerate(zip(self.archive_fitness, self.archive_fitness_normalized))
         ]
         return spark.createDataFrame(rows, "solution int, dev double, conn double, dev_norm double, conn_norm double")
-
-
-# Phase telemetry of the most recent fit() in this process — read by
-# bench.py right after timing a fit entry so the artifact records the
-# setup/per-iteration decomposition without threading the MopsoResult
-# through the generic query interface (which returns DataFrames).
-LAST_FIT_PHASES: dict = {}
 
 
 class MopsoEngine:
@@ -171,27 +165,23 @@ class MopsoEngine:
         real cluster time. The truncated run equals the prefix of the
         full run exactly (the loop has no lookahead).
 
-        The fit persists its points and neighbor tables; they are
-        released when it returns and also when it raises."""
-        held: list[DataFrame] = []
-        try:
+        The fit persists its points and neighbor tables (and, in exact
+        kNN mode, broadcasts the points) inside its own query scope, so
+        they are released when it returns and also when it raises. The
+        phase walls go to :data:`mopso_engine.scope.PHASES`."""
+        with query_scope():
             return self._fit(
                 points,
-                held,
                 checkpoint_dir=checkpoint_dir,
                 checkpoint_every=checkpoint_every,
                 resume=resume,
                 stop_after=stop_after,
                 early_stop_patience=early_stop_patience,
             )
-        finally:
-            for df in held:
-                df.unpersist()
 
     def _fit(
         self,
         points: DataFrame,
-        held: list[DataFrame],
         *,
         checkpoint_dir: str | None,
         checkpoint_every: int,
@@ -199,14 +189,12 @@ class MopsoEngine:
         stop_after: int | None,
         early_stop_patience: int | None,
     ) -> MopsoResult:
-        """The body of :meth:`fit`; every DataFrame it persists goes into
-        ``held`` for the caller to release."""
+        """The body of :meth:`fit`."""
         cfg = self.cfg
         rng = np.random.default_rng(cfg.seed)
         t0 = time.time()
 
-        pts = points.select("id", "features", "label").persist()
-        held.append(pts)
+        pts = track(points.select("id", "features", "label").persist())
         # ONE fused stats job (count + distinct-label + per-dim bounds):
         # see init.corpus_stats — three fewer full scans than r5's fit
         n, d, k, bounds = init_mod.corpus_stats(pts, cfg.k)
@@ -258,8 +246,7 @@ class MopsoEngine:
                 # exact mode would broadcast the whole table — fall back to
                 # the reference's own cluster-scale semantics
                 knn_mode = "partition_local"
-        nbr = with_neighbors(pts_k, cfg.knn_l, mode=knn_mode, n_rows=n).persist()
-        held.append(nbr)
+        nbr = track(with_neighbors(pts_k, cfg.knn_l, mode=knn_mode, n_rows=n).persist())
         part_weighted = cfg.fitness_mode == "partition_local"
 
         archive = Archive(
@@ -481,8 +468,8 @@ class MopsoEngine:
             # resumed fit's sec_per_iter stays a pure kernel number
             phases["resume_load"] = resume_load_sec
             setup_sub["resume_load"] = resume_load_sec
-        LAST_FIT_PHASES.clear()
-        LAST_FIT_PHASES.update(phases)
+        PHASES.clear()
+        PHASES.update(phases)
         return MopsoResult(
             archive_positions=[e.position for e in archive.entries],
             archive_fitness=front,
@@ -503,16 +490,15 @@ class MopsoEngine:
     def evaluate(self, points: DataFrame, result: MopsoResult) -> dict:
         """Post-fit evaluation suite (purity/accuracy/DBI/inertia), the
         reference's report body (Spark_MOPSO_Avg.scala:319-401)."""
-        awl = assign_with_labels(points, result.best_position).persist()
-        purity, accepted = metrics_mod.purity_accuracy(awl, result.n_points, result.k)
-        out = {
-            "purity": purity,
-            "purity_accepted": accepted,
-            "inertia": metrics_mod.inertia(awl),
-            "dbi": metrics_mod.davies_bouldin(
-                awl, result.best_position, max_not_reset=self.cfg.bug_compat.dbi_max_not_reset
-            ),
-            "cluster_sizes": {r["cluster"]: r["n"] for r in metrics_mod.cluster_sizes(awl).collect()},
-        }
-        awl.unpersist()
-        return out
+        with query_scope():
+            awl = track(assign_with_labels(points, result.best_position).persist())
+            purity, accepted = metrics_mod.purity_accuracy(awl, result.n_points, result.k)
+            return {
+                "purity": purity,
+                "purity_accepted": accepted,
+                "inertia": metrics_mod.inertia(awl),
+                "dbi": metrics_mod.davies_bouldin(
+                    awl, result.best_position, max_not_reset=self.cfg.bug_compat.dbi_max_not_reset
+                ),
+                "cluster_sizes": {r["cluster"]: r["n"] for r in metrics_mod.cluster_sizes(awl).collect()},
+            }

@@ -24,42 +24,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mopso_engine.scope import track
+
 #: micro-unit scale for quantized rates
 _UNIT = 1_000_000
 
-#: SHARED tiny-table unpersist registry (neutral name — VERDICT r15 #5):
-#: persisted KB-scale tables retained so ONE shuffle can feed both a
-#: driver-side fit collect and the output join (the isotonic/WoE
-#: sharing shape). Contract: any module may append; the RUNNER clears
-#: between queries (bench.py / tools/check_oracle.py /
-#: tools/quiet_bestof.py / tools/scale_smoke.py call
-#: :func:`clear_calib_caches` after each query completes), so appenders
-#: must consume their entry within the query that created it — an
-#: operator whose OUTPUT plan still reads a registered table after the
-#: clear would silently recompute its lineage (the hazard ADVICE r15
-#: flagged; removal_effect_attribution now emits literals instead).
-_SHARED_TINY_CACHES: list[DataFrame] = []
-
-#: backward-compat alias (the original, calib-only name)
-_CALIB_CACHES = _SHARED_TINY_CACHES
-
-
-def clear_calib_caches() -> int:
-    """Unpersist every table in the shared registry (calib's own bucket
-    tables and any other module's appended tiny tables)."""
-    n = 0
-    while _SHARED_TINY_CACHES:
-        df = _SHARED_TINY_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        n += 1
-    return n
-
-
-#: neutral-name alias for the clear hook
-clear_shared_tiny_caches = clear_calib_caches
+# isotonic/WoE sharing shape: ONE shuffle builds a persisted KB-scale
+# table that feeds both a driver-side fit collect and the output join.
+# The table is tracked (:func:`mopso_engine.scope.track`), so the
+# caller's ``query_scope()`` releases it after the output is consumed;
+# an output plan read after that release would silently recompute its
+# lineage (the hazard ADVICE r15 flagged;
+# removal_effect_attribution emits literals instead).
 
 
 def rate_micro(pos: int, n: int) -> int:
@@ -180,7 +156,7 @@ def woe_iv_encode(
         )
         .persist()
     )
-    _SHARED_TINY_CACHES.append(agg)
+    track(agg)
     rows = [(r["category"], int(r["n"]), int(r["pos"])) for r in agg.collect()]
     fit = woe_iv_fit(rows)
     spark = df.sparkSession
@@ -217,7 +193,7 @@ def isotonic_calibrate(
         )
         .persist()
     )
-    _SHARED_TINY_CACHES.append(agg)  # ONE events shuffle feeds fit AND output
+    track(agg)  # ONE events shuffle feeds fit AND output
     rows = [(r["bucket"], r["n"], r["positives"]) for r in agg.collect()]
     fit = pava_fit(rows)
     spark = df.sparkSession

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mopso_engine.ext.text import tokens_col
+from mopso_engine.scope import track
 
 
 def normalized_text():
@@ -55,43 +56,21 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-#: registry for persisted shingle tables a CALLER asks us to track (via
-#: :func:`persist_shingles`). The dedup operators themselves no longer
-#: persist anything internally: measured at sf0.1/local[32] (round 3), an
-#: internal ``persist()`` of the shared shingle subtree made
-#: ``jaccard_pairs`` 3-5× SLOWER (18-26 s vs 3.6-7.2 s) and
-#: ``simhash_hamming_pairs`` up to 10× slower (48 s vs 4.7 s): the
-#: InMemoryRelation boundary defeats whole-stage codegen fusion and
-#: Catalyst's ReusedExchange already dedups the shared subtree without
-#: materializing it — the same result ``dedup_verified`` measured in r1/r2.
-#: At 100 TB, persist explicitly (``shingles=persist_shingles(...)``) only
-#: when the corpus SCAN dominates the join fan-out, and release with
-#: :func:`clear_shingle_caches`.
-_SHINGLE_CACHES: list[DataFrame] = []
-
-
-def persist_shingles(sh: DataFrame) -> DataFrame:
-    """Persist a shingle/fingerprint table and register it for
-    :func:`clear_shingle_caches`. Opt-in: callers own the decision (see
-    the registry note above for why the operators never persist)."""
-    sh = sh.persist()
-    _SHINGLE_CACHES.append(sh)
-    return sh
-
-
-def clear_shingle_caches() -> int:
-    """Unpersist every internally-created shingle cache; returns how many
-    were released. Safe to call at any time — the backing plans recompute
-    if a not-yet-executed DataFrame still references them."""
-    n = 0
-    while _SHINGLE_CACHES:
-        df = _SHINGLE_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+# Persist note: the shingle-building operators do not persist the
+# shared shingle subtree. Measured at sf0.1/local[32] (round 3), an
+# internal ``persist()`` of it made ``jaccard_pairs`` 3-5× SLOWER
+# (18-26 s vs 3.6-7.2 s) and ``simhash_hamming_pairs`` up to 10× slower
+# (48 s vs 4.7 s): the InMemoryRelation boundary defeats whole-stage
+# codegen fusion and Catalyst's ReusedExchange already dedups the shared
+# subtree without materializing it — the same result ``dedup_verified``
+# measured in r1/r2. Three operators do persist a narrow table whose
+# sequential consumers' differing projections defeat exchange reuse:
+# :func:`canonical_by_score` (member × score), :func:`incremental_dedup_bloom`
+# (the probed increment) and :func:`jaccard_prefix_pairs` (the prefix
+# table). Each passes it to :func:`mopso_engine.scope.track`, so the
+# caller's ``query_scope()`` releases it once the output is consumed. At
+# 100 TB, persist a shingle table yourself (and ``track`` it) only when
+# the corpus SCAN dominates the join fan-out.
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -162,7 +141,7 @@ def jaccard_pairs(
     Pass ``shingles`` to reuse an already-materialized (doc_id, shingle)
     table and own its lifecycle; by default the shared shingle subtree is
     deduped by ReusedExchange, not a persist (measured 3-5× faster — see
-    the module registry note).
+    the module persist note).
     """
     sh = shingles if shingles is not None else word_shingles(docs, k)
     join_side = sh
@@ -213,7 +192,7 @@ def jaccard_on_candidates(
     to reuse an already-materialized (doc_id, shingle) table (e.g. the one
     the candidate generator was built from); by default the shared shingle
     subtree is deduped by ReusedExchange, not a persist (measured faster —
-    see the module registry note)."""
+    see the module persist note)."""
     sh = shingles if shingles is not None else word_shingles(docs, k)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     cand = candidates.select("doc_a", "doc_b")
@@ -418,7 +397,7 @@ def simhash_hamming_pairs(
     column (see there for the pigeonhole recall guarantee). The
     fingerprint table feeds both sides of the band self-join —
     ReusedExchange dedups the token-hash aggregation without a persist
-    (an explicit persist measured ~10× SLOWER at sf0.1; registry note)."""
+    (an explicit persist measured ~10× SLOWER at sf0.1; persist note)."""
     sh = simhash(docs, bits)
     out = hamming_pairs(
         sh, id_col="doc_id", fp_col="simhash", bits=bits, bands=bands, max_hamming=max_hamming
@@ -997,12 +976,11 @@ def canonical_by_score(
     )
     # joined feeds the winner aggregate AND the final member rejoin —
     # sequential consumers, so unlike the shingle subtrees (see the
-    # registry note: persist there serializes SIBLING broadcasts and
+    # persist note: persist there serializes SIBLING broadcasts and
     # loses) caching the tiny member×score table costs nothing and
     # saves the second evaluation of the scores lineage, which is
     # typically a full corpus pass (quality_score in dedup_keep_best)
-    joined = joined.persist()
-    _SHINGLE_CACHES.append(joined)
+    joined = track(joined.persist())
     # winner per component: min over the (negated-score, id) ordering
     # struct — min of -score is max score, ties break to min id — with
     # min_by carrying the (type-agnostic) id payload, so string ids
@@ -1153,40 +1131,13 @@ def bloom_maybe_col(fp_col, words: list[int], *, m_bits: int, k_hashes: int = 4)
 LITERAL_BLOOM_WORDS_MAX = 512
 
 
-#: ``sparkContext.broadcast`` handles created by
-#: :func:`bloom_maybe_kernel`, released by
-#: :func:`clear_bloom_broadcasts` — same lifecycle contract as the
-#: DataFrame cache registries (``_SHINGLE_CACHES`` here,
-#: ``_SHARED_TINY_CACHES`` in calib): the RUNNER clears between
-#: queries, after the probe's output is consumed. Without this a
-#: long-lived session running :func:`incremental_dedup_bloom` per
-#: crawl increment accumulates executor broadcast blocks (ADVICE r15).
-_BLOOM_BROADCASTS: list = []
-
-
-def clear_bloom_broadcasts() -> int:
-    """Destroy every broadcast word array retained by
-    :func:`bloom_maybe_kernel`; returns how many were released. Call
-    only AFTER the probing DataFrame has been consumed — a destroyed
-    broadcast cannot be re-read by a still-lazy plan."""
-    n = 0
-    while _BLOOM_BROADCASTS:
-        bc = _BLOOM_BROADCASTS.pop()
-        try:
-            bc.destroy()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
 def bloom_maybe_kernel(spark, words: list[int], *, m_bits: int, k_hashes: int = 4):
     """Arrow-kernel Bloom membership probe — the SAME predicate as
     :func:`bloom_maybe_col` for filters beyond
     ``LITERAL_BLOOM_WORDS_MAX``: the dense word array rides a
     ``sparkContext.broadcast`` (torrent protocol, shipped once per
-    executor; registered in ``_BLOOM_BROADCASTS`` for the runner's
-    post-query :func:`clear_bloom_broadcasts`) instead of the plan,
+    executor; tracked, so the caller's ``query_scope()`` destroys it
+    once the probing plan is consumed) instead of the plan,
     and the double-hashed probe is vectorized numpy over each Arrow
     batch of md5-hex fingerprints — still zero shuffle, zero join, and
     bit-identical to the expression path (unit-pinned against it on
@@ -1213,10 +1164,7 @@ def bloom_maybe_kernel(spark, words: list[int], *, m_bits: int, k_hashes: int = 
             f"bloom_maybe_kernel: m_bits {m_bits} does not match "
             f"{len(words)} {BLOOM_WORD_BITS}-bit words"
         )
-    bwords = spark.sparkContext.broadcast(
-        np.asarray(words, dtype=np.int64)
-    )
-    _BLOOM_BROADCASTS.append(bwords)
+    bwords = track(spark.sparkContext.broadcast(np.asarray(words, dtype=np.int64)))
     wb = BLOOM_WORD_BITS
 
     def _probe(fp):
@@ -1316,12 +1264,12 @@ def incremental_dedup_bloom(
         )
     # the probed increment feeds TWO consumers (the maybe subset's exact
     # check and the final decision join) — persist the narrow
-    # (doc_id, fp, maybe_known) table once (registered for
-    # clear_shingle_caches) instead of re-running the increment scan +
+    # (doc_id, fp, maybe_known) table once (tracked for the caller's
+    # query scope) instead of re-running the increment scan +
     # fingerprint + probe per consumer (r17 audit: the increment's union
     # branches and the probe kernel each appeared twice in the executed
     # plan before)
-    probed = persist_shingles(new_fp.withColumn("maybe_known", maybe))
+    probed = track(new_fp.withColumn("maybe_known", maybe).persist())
     maybe = probed.where(F.col("maybe_known"))
     confirmed = maybe.join(known_fps.select("fp").distinct(), "fp", "left_semi").select(
         "doc_id", F.lit(True).alias("is_known")
@@ -1384,7 +1332,7 @@ def jaccard_prefix_pairs(
     num, den = frac.numerator, frac.denominator
     # the RAW shingle table stays unpersisted deliberately: persisting it
     # measured WORSE here (r17 A/B best-of-5: 6.44 vs 5.53/5.49 — the
-    # same broadcast-sibling serialization the module registry documents)
+    # same broadcast-sibling serialization the module persist note documents)
     sh = word_shingles(docs, k)
     dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = (
@@ -1400,18 +1348,20 @@ def jaccard_prefix_pairs(
     )
     # exact integer ceil(t*n) = (n*num + den - 1) DIV den
     # the prefix table feeds BOTH candidate-join sides; persist it once
-    # (registered for clear_shingle_caches) — without it each side
+    # (tracked for the caller's query scope) — without it each side
     # re-ran the whole shingle + df-count + double-window lineage
     # (r17 audit: 40 parquet scans / 60 exchanges / 0 ReusedExchange in
     # the executed plan; the sides' differing projections defeat
     # exchange reuse exactly as in the retrieval-eval refutation)
-    prefix = persist_shingles(
+    prefix = track(
         ranked.where(
             F.col("r")
             <= F.col("n_sh")
             - F.expr(f"CAST((n_sh * {num} + {den - 1}) DIV {den} AS BIGINT)")
             + F.lit(1)
-        ).select("doc_id", "shingle")
+        )
+        .select("doc_id", "shingle")
+        .persist()
     )
     cand = (
         prefix.select(F.col("doc_id").alias("doc_a"), "shingle")

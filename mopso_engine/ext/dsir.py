@@ -41,29 +41,13 @@ from typing import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mopso_engine.scope import track
+
 __all__ = [
     "dsir_log_ratio_micro",
     "dsir_weights",
     "dsir_topk",
-    "clear_dsir_caches",
 ]
-
-#: (doc_id, bucket) count tables persisted by :func:`dsir_weights` —
-#: consumed twice (model fit + scoring); long sessions clear them.
-_DSIR_CACHES: list[DataFrame] = []
-
-
-def clear_dsir_caches() -> int:
-    """Unpersist every bucket-count table retained by :func:`dsir_weights`."""
-    n = 0
-    while _DSIR_CACHES:
-        df = _DSIR_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        n += 1
-    return n
 
 
 def dsir_log_ratio_micro(
@@ -147,7 +131,7 @@ def dsir_weights(
         .agg(F.count(F.lit(1)).alias("c"))
         .persist()
     )
-    _DSIR_CACHES.append(counts)
+    track(counts)
     # the two bag-of-buckets models: one ≤ n_buckets-row aggregate over
     # the SAME cache, collected driver-side (bounded by construction)
     model_rows = (

@@ -22,36 +22,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mopso_engine.scope import PHASES, track
+
 __all__ = [
     "pagerank",
-    "clear_pagerank_caches",
     "cooccurrence_affinity",
     "triangle_counts",
     "kcore",
     "label_propagation",
-    "LAST_GRAPH_PHASES",
 ]
-
-#: per-phase wall clocks of the LAST pagerank/bfs_levels call — read by
-#: bench.py right after timing a graph entry (the LAST_FIT_PHASES
-#: pattern, VERDICT r11 #2: supplier_bfs swung 15→22s across rounds on
-#: unchanged code with quiet calibs and had no in-artifact decomposition
-#: to adjudicate it). "setup" is the one-off edge/node cache build
-#: (forced eagerly so it can't leak into the first block); each entry of
-#: "blocks" is one materialization job covering the lazily-chained
-#: rounds since the previous one. A slow bench reading then
-#: self-adjudicates: setup inflated with flat blocks = per-job fixed
-#: cost (launch/IO) noise; a block inflated = a real kernel regression.
-LAST_GRAPH_PHASES: dict = {}
-
-#: every query-lifetime cache the graph operators retain: final
-#: rank/label/level vectors (callers iterate on them; loop INTERNAL
-#: caches are unpersisted before returning) plus triangle_counts' edge
-#: and orientation tables (consumed by several joins of one output
-#: plan). Long sessions (the oracle sweep runs ~270 queries in one JVM)
-#: and the bench's per-attempt reset call :func:`clear_pagerank_caches`
-#: to drop them all.
-_GRAPH_CACHES: list[DataFrame] = []
 
 #: edge rows per shuffle partition for the iterative loops — ~24 B/row
 #: keeps partitions in the tens-of-MB range (guide: size partitions by
@@ -68,21 +47,6 @@ def _iter_width(n_edges: int, session_sp: int) -> int:
     session's shuffle-partition upper bound (so a cluster session's
     tuning still caps it)."""
     return max(1, min(int(session_sp), -(-int(n_edges) // _EDGE_ROWS_PER_PARTITION)))
-
-
-def clear_pagerank_caches() -> int:
-    """Unpersist every cache in the graph registry (rank/label/level
-    vectors, triangle edge/orientation tables). Name kept for the
-    established bench/sweep hook wiring."""
-    n = 0
-    while _GRAPH_CACHES:
-        df = _GRAPH_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        n += 1
-    return n
 
 
 def pagerank(
@@ -147,7 +111,10 @@ def pagerank(
     small — that is what personalization means).
 
     Returns (node BIGINT, units BIGINT) — rank in integer micro-units,
-    persisted (registered with :func:`clear_pagerank_caches`).
+    persisted and tracked for the caller's ``query_scope()``. The walls
+    go to :data:`mopso_engine.scope.PHASES`: "setup" is the eager
+    edge/node cache build, each "blocks" entry one materialization job
+    over the rounds chained since the previous one.
     """
     if not 0 < damping_pct < 100:
         raise ValueError(f"damping_pct must be in (0, 100), got {damping_pct}")
@@ -285,10 +252,9 @@ def pagerank(
     esrc.unpersist()
     nodes.unpersist()
     phases["n_iters_run"] = iters
-    LAST_GRAPH_PHASES.clear()
-    LAST_GRAPH_PHASES.update(phases)
-    _GRAPH_CACHES.append(ranks)
-    return ranks
+    PHASES.clear()
+    PHASES.update(phases)
+    return track(ranks)
 
 
 def cooccurrence_affinity(
@@ -326,7 +292,7 @@ def cooccurrence_affinity(
     """
     # the deduped (basket, item) table feeds FIVE consumers (both pair
     # sides, two support broadcasts, the N scalar) — persist it once
-    # (registered for clear_pagerank_caches) instead of re-running the
+    # (tracked for the caller's query scope) instead of re-running the
     # upstream scan + dedup per consumer: the executed plan held 5
     # parquet scans and zero ReusedExchange before (r17 audit; the
     # consumers' differing projections defeat exchange reuse)
@@ -337,7 +303,7 @@ def cooccurrence_affinity(
         .distinct()
         .persist()
     )
-    _GRAPH_CACHES.append(bi)
+    track(bi)
     left = bi.select("basket", F.col("item").alias("item_a"))
     right = bi.select("basket", F.col("item").alias("item_b"))
     pairs = (
@@ -398,10 +364,10 @@ def triangle_counts(
     (fan-out ≤ outdeg² ≤ m per apex by the √m bound); closing = an
     equality join on the (lesser, greater) pair key. Every shuffle is an
     equality key shuffle; nothing quadratic in |V|. The deduped edge
-    table and the oriented edge table are persisted once (registered in
-    the module cache registry, cleared by :func:`clear_pagerank_caches`)
-    — without that, the 3 consumers of the oriented table times the 2
-    degree-side consumers times the 3 per-role projections of the
+    table and the oriented edge table are persisted once (and tracked,
+    so the caller's ``query_scope()`` releases them) — without that,
+    the 3 consumers of the oriented table times the 2 degree-side
+    consumers times the 3 per-role projections of the
     triangle list re-ran the upstream edge derivation ~45× (the
     pre-r16 part_triangles plan held 90 parquet scans and 229
     exchanges; now 2 scans); the per-role union is likewise folded into
@@ -422,8 +388,7 @@ def triangle_counts(
         # the canonicalize+dedup exchange is then a provable no-op and
         # the cache build skips one full edge-table shuffle.
         e = e.distinct()
-    e = e.persist()
-    _GRAPH_CACHES.append(e)
+    e = track(e.persist())
     # same (node ← a, node ← b) multiset as the historical two-branch
     # union, in one pass over e
     deg = (
@@ -443,7 +408,7 @@ def triangle_counts(
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias("deg_dst"),
     ).persist()
-    _GRAPH_CACHES.append(o)
+    track(o)
     o1 = o.select("src", F.col("dst").alias("v"), F.col("deg_dst").alias("deg_v"))
     o2 = o.select("src", F.col("dst").alias("w"), F.col("deg_dst").alias("deg_w"))
     v_first = (F.col("deg_v") < F.col("deg_w")) | (
@@ -659,8 +624,7 @@ def label_propagation(
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     symp.unpersist()
     nodes.unpersist()
-    _GRAPH_CACHES.append(labels)
-    return labels
+    return track(labels)
 
 
 def bfs_levels(
@@ -697,8 +661,8 @@ def bfs_levels(
     the predecessor cache drops as soon as its successor materializes.
     Distances are small exact integers; unreached stays NULL.
 
-    Returns (node BIGINT, dist INT nullable), persisted (registered
-    with :func:`clear_pagerank_caches`).
+    Returns (node BIGINT, dist INT nullable), persisted and tracked for
+    the caller's ``query_scope()``.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -798,7 +762,6 @@ def bfs_levels(
     esrc.unpersist()
     nodes.unpersist()
     phases["n_rounds_run"] = n_rounds_run
-    LAST_GRAPH_PHASES.clear()
-    LAST_GRAPH_PHASES.update(phases)
-    _GRAPH_CACHES.append(dist)
-    return dist
+    PHASES.clear()
+    PHASES.update(phases)
+    return track(dist)

@@ -27,6 +27,8 @@ from typing import Mapping, NamedTuple, Optional, Union
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from mopso_engine.scope import track
+
 __all__ = [
     "PrunedTf",
     "bm25_topk",
@@ -35,17 +37,11 @@ __all__ = [
     "exact_rerank",
     "idf_micro_table",
     "bm25_rational_constants",
-    "clear_retrieval_caches",
     "ndcg_weights_micro",
     "coverage_qrels",
     "retrieval_eval",
     "pruned_tf",
 ]
-
-# query-lifetime persisted tf tables (the pruned (doc_id, term) counts a
-# bm25_topk plan consumes twice: once collected for the driver-side idf
-# pinning, once in the scoring plan). Mirrors ext.graph._PR_CACHES.
-_BM25_CACHES: list[DataFrame] = []
 
 
 class PrunedTf(NamedTuple):
@@ -72,19 +68,6 @@ def _tf_frame(
     if isinstance(tf, PrunedTf):
         return tf.df, tf.corpus_stats
     return tf, None
-
-
-def clear_retrieval_caches() -> int:
-    """Unpersist every pruned-tf table retained by :func:`bm25_topk`."""
-    n = 0
-    while _BM25_CACHES:
-        df = _BM25_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        n += 1
-    return n
 
 
 def idf_micro_table(df_by_term: Mapping[str, int], n_docs: int) -> dict[str, int]:
@@ -128,8 +111,8 @@ def pruned_tf(docs: DataFrame, queries: DataFrame) -> PrunedTf:
     """The pruned (doc_id, term, tf, dl) table every retriever/labeler
     in this module feeds on: the corpus token explode semi-joined
     against the tiny distinct query-term set BEFORE the one
-    (doc_id, term) count shuffle, PERSISTED and registered for
-    :func:`clear_retrieval_caches`. Build it ONCE and pass it to both
+    (doc_id, term) count shuffle, PERSISTED and tracked for the
+    caller's ``query_scope()``. Build it ONCE and pass it to both
     :func:`bm25_topk` and :func:`coverage_qrels` when composing them
     (bm25_eval's shape) — the corpus-scale pass is then paid once
     instead of per consumer (self-review).
@@ -174,7 +157,7 @@ def pruned_tf(docs: DataFrame, queries: DataFrame) -> PrunedTf:
         .agg(F.count("*").alias("tf"), F.max("dl").alias("dl"))
         .persist()
     )
-    _BM25_CACHES.append(tf)
+    track(tf)
     return PrunedTf(df=tf, corpus_stats=obs)
 
 

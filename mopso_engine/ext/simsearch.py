@@ -22,34 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-#: query-lifetime persisted tables (the decoded+assigned cell table a
-#: semdedup plan consumes three times). Mirrors graph._GRAPH_CACHES /
-#: retrieval._BM25_CACHES; the bench/sweep runners call
-#: :func:`clear_sim_caches` after every query so nothing leaks across
-#: timings.
-_SIM_CACHES: list[DataFrame] = []
-
-
-def persist_sim(df: DataFrame) -> DataFrame:
-    """Persist a vector/assignment table and register it for
-    :func:`clear_sim_caches` — for caller compositions whose decoded
-    feature table feeds several consumers (the crossmodal_eval shape)."""
-    df = df.persist()
-    _SIM_CACHES.append(df)
-    return df
-
-
-def clear_sim_caches() -> int:
-    """Unpersist every table retained by this module's operators."""
-    n = 0
-    while _SIM_CACHES:
-        df = _SIM_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        n += 1
-    return n
+from mopso_engine.scope import track
 
 
 def _dot(a: str | Column, b: str | Column) -> Column:
@@ -728,12 +701,11 @@ def semdedup(embeddings: DataFrame, codebook, *, threshold: float = 0.4) -> Data
         embeddings if "label" in embeddings.columns else embeddings.withColumn("label", F.lit(0))
     ).select("vec_id", "vec")
     # the assigned table feeds THREE consumers (both self-join sides +
-    # the final keep join) — persist it once (registered for
-    # clear_sim_caches) instead of re-running the corpus scan + decode +
+    # the final keep join) — persist it once (tracked for the caller's
+    # query scope) instead of re-running the corpus scan + decode +
     # argmax kernels per consumer (r17 audit: 3 scans / 6 Arrow kernel
     # nodes in the executed plan before)
-    cells = vecs.withColumn("cell", _argmax_cell_kernel(C)("vec")).persist()
-    _SIM_CACHES.append(cells)
+    cells = track(vecs.withColumn("cell", _argmax_cell_kernel(C)("vec")).persist())
     a = cells.select(F.col("vec_id").alias("id_a"), F.col("vec").alias("va"), "cell")
     b = cells.select(F.col("vec_id").alias("id_b"), F.col("vec").alias("vb"), "cell")
     cos = _cosine_kernel()("va", "vb")

@@ -32,7 +32,6 @@ the approximate 100 TB path).
 
 from __future__ import annotations
 
-import os
 from typing import Iterable
 
 import numpy as np
@@ -40,7 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -50,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from mopso_engine.assign import _distances
+from mopso_engine.scope import track
 
 #: cap on the scratch distance-matrix cells per block for the BLAS/gemm
 #: path (262_144 cells = 2 MB of float64): sized to stay CACHE-resident
@@ -310,19 +309,6 @@ def _topl_pruned(x, ref, ref_ids, self_pos, l_eff, dist_fn, cells, margin):
     return pos, dist
 
 
-#: (id, label, self_nbr_flat, nbr_n): self + L neighbor vectors packed in
-#: one fixed-width array<double>; nbr_n = real neighbor count (≤ L).
-#: Used by the RELATIONAL with_neighbors modes, whose flat column is
-#: built declaratively (F.concat of arrays).
-_NBR_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("label", IntegerType(), True),
-        StructField("self_nbr_flat", ArrayType(DoubleType()), False),
-        StructField("nbr_n", IntegerType(), False),
-    ]
-)
-
 #: Binary twin for the KERNEL-built modes ('exact', 'partition_local'):
 #: self_nbr_flat is the same (1+L)·d doubles as raw little-endian float64
 #: bytes. One bytes object per row Arrow-transfers and reconstructs
@@ -375,7 +361,8 @@ def knn_pairs_exact(
     Guarded by ``MAX_EXACT_KNN_ROWS``: the full-table collect + broadcast
     is a driver/executor memory foot-gun beyond ~10⁵ rows — callers with
     bigger tables must use 'partition_local' or 'lsh'. Pass ``n_rows``
-    when already known to skip the extra count job.
+    when already known to skip the extra count job. The broadcast is
+    tracked: consume the pairs inside the caller's ``query_scope()``.
     """
     n = n_rows if n_rows is not None else points.count()
     if n > MAX_EXACT_KNN_ROWS:
@@ -390,8 +377,7 @@ def knn_pairs_exact(
     feats = np.array([r["features"] for r in rows], dtype=np.float64)
     order = np.argsort(ids)  # searchsorted self-exclusion needs sorted ids
     ids, feats = ids[order], feats[order]
-    sc = points.sparkSession.sparkContext
-    bc = sc.broadcast((ids, feats))
+    bc = track(points.sparkSession.sparkContext.broadcast((ids, feats)))
     from mopso_engine.assign import _distances_exact
 
     dist_fn = _distances_exact if exact_math else None
@@ -591,10 +577,12 @@ def with_neighbors(
     * 'exact' — global kNN via a broadcast of all features; the kernel
       emits neighbor features directly, so the whole precompute is ONE
       map stage, zero shuffles (to ~10⁵ rows: the broadcast is N·d·8 B).
+      The broadcast is tracked: consume the plan inside the caller's
+      ``query_scope()``.
     * 'partition_local' — neighbors within each input partition only: the
       reference Avg's semantics (Spark_MOPSO_Avg.scala:843-865) and the
       unbounded-scale path (no broadcast, no shuffle).
-    * 'exact_pairs'/'crossjoin'/'lsh' — build a (id, nbr_id, rank) pair
+    * 'crossjoin'/'lsh' — build a (id, nbr_id, rank) pair
       table, then join neighbor features back (one shuffle, once per fit);
       'lsh' is the approximate big-N path.
     """
@@ -648,7 +636,7 @@ def with_neighbors(
         feats = np.array([r["features"] for r in rows], dtype=np.float64)
         order = np.argsort(ids)
         ids, feats = ids[order], feats[order]
-        bc = points.sparkSession.sparkContext.broadcast((ids, feats))
+        bc = track(points.sparkSession.sparkContext.broadcast((ids, feats)))
 
         out_schema = _NBR_SCHEMA_BIN
 
@@ -672,9 +660,7 @@ def with_neighbors(
 
         return points.select("id", "features", "label").mapInPandas(kernel, schema=out_schema)
 
-    if mode == "exact_pairs":
-        pairs = knn_pairs_exact(points, l_nbrs, n_rows=n_rows)
-    elif mode == "crossjoin":
+    if mode == "crossjoin":
         pairs = knn_pairs_crossjoin(points, l_nbrs)
     elif mode == "lsh":
         pairs = knn_pairs_lsh(points, l_nbrs)
@@ -700,10 +686,10 @@ def with_neighbors(
 #: fitness-kernel reduction block: matches the exact-mode layout's ~2k-row
 #: partition sizing (engine.py), so engine-owned layouts reduce in one
 #: block exactly as before; only oversized caller-owned partitions split.
-#: Env-overridable for memory/throughput tuning — NOTE the block size is
-#: part of the float-summation grouping, so changing it changes seeded
-#: fit trajectories in the last ulps (regenerate recorded oracles).
-_REDUCE_BLOCK_ROWS = int(os.environ.get("MOPSO_REDUCE_BLOCK_ROWS", "2048"))
+#: The block size is part of the float-summation grouping, so changing it
+#: changes seeded fit trajectories in the last ulps (regenerate the
+#: recorded fit oracles with tools/gen_fit_oracle.py).
+_REDUCE_BLOCK_ROWS = 2048
 
 
 def _fixed_blocks(batches: "Iterable[pd.DataFrame]", block_rows: int):

@@ -13,6 +13,7 @@ from mopso_engine import metrics as metrics_mod
 from mopso_engine.assign import assign_with_labels
 from mopso_engine.engine import MopsoEngine, MopsoResult
 from mopso_engine.init import kmeans_centers
+from mopso_engine.scope import query_scope, track
 
 
 def build_report(engine: MopsoEngine, points: DataFrame, result: MopsoResult, *, kmeans_baseline: bool = True) -> dict:
@@ -62,15 +63,15 @@ def build_report(engine: MopsoEngine, points: DataFrame, result: MopsoResult, *,
         entry["purity_accepted"] = len({r["modal_cluster"] for r in rows}) == result.k
     if kmeans_baseline:
         km = kmeans_centers(points, result.k, seed=cfg.seed)
-        awl = assign_with_labels(points, km).persist()
-        purity, accepted = metrics_mod.purity_accuracy(awl, result.n_points, result.k)
-        report["kmeans_baseline"] = {
-            "purity": purity,
-            "purity_accepted": accepted,
-            "inertia": metrics_mod.inertia(awl),
-            "centers": np.asarray(km).tolist(),
-        }
-        awl.unpersist()
+        with query_scope():
+            awl = track(assign_with_labels(points, km).persist())
+            purity, accepted = metrics_mod.purity_accuracy(awl, result.n_points, result.k)
+            report["kmeans_baseline"] = {
+                "purity": purity,
+                "purity_accepted": accepted,
+                "inertia": metrics_mod.inertia(awl),
+                "centers": np.asarray(km).tolist(),
+            }
     return report
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from mopso_engine.assign import assign_all_solutions
 from mopso_engine.objectives import knn_pairs_exact, knn_pairs_partition_local
+from mopso_engine.scope import PHASES, query_scope, track
 
 
 def rescore_archive(
@@ -53,43 +54,44 @@ def rescore_archive(
       with a big fit's kernel (an exact global rescore of a
       partition-local fit would disagree by construction).
 
-    Eager: persists the multi-solution assignment for its two uses and
-    releases it before returning.
+    Eager: persists the laid-out points and the multi-solution
+    assignment inside its own query scope and releases them (and the
+    exact mode's broadcast) before returning.
     """
     import time
 
     t0 = time.time()
-    stack = np.stack(positions)
-    if knn_mode == "partition_local":
-        if layout_partitions is None:
-            raise ValueError(
-                "partition_local rescore needs the fit's layout_partitions "
-                "(MopsoResult.layout_partitions) — neighbor sets are a "
-                "function of the layout"
-            )
-        # rebuild the fit's layout bit-for-bit: hash-partition on id +
-        # in-partition sort is a pure function of (data, partition count)
-        pts = pts.repartition(layout_partitions, "id").sortWithinPartitions("id")
-        pairs = knn_pairs_partition_local(pts, knn_l)
-    elif knn_mode == "exact":
-        # spread the CPU-bound exact kNN + multi-solution assignment
-        # kernels: a small parquet corpus arrives as one scan partition,
-        # which would serialize the quadratic work (results are
-        # layout-independent; the grouped sums absorb reorder noise well
-        # below the oracle rounding)
-        dp = pts.sparkSession.sparkContext.defaultParallelism
-        pts = pts.repartition(dp, "id")
-        pairs = knn_pairs_exact(pts, knn_l, n_rows=n_rows, exact_math=True)
-    else:
-        raise ValueError(f"unknown rescore knn_mode: {knn_mode}")
-    # the laid-out points feed THREE jobs (the kNN collect, the
-    # assignment kernel and the pair kernel) — persist the layout once
-    # so each consumer reads the cache instead of re-running the parquet
-    # scan + repartition (2 scans + 2 exchanges removed; kernel rows are
-    # row-independent, so values are unchanged). Released below.
-    pts = pts.persist()
-    asg = assign_all_solutions(pts, stack, exact_math=True).persist()
-    try:
+    with query_scope():
+        stack = np.stack(positions)
+        if knn_mode == "partition_local":
+            if layout_partitions is None:
+                raise ValueError(
+                    "partition_local rescore needs the fit's layout_partitions "
+                    "(MopsoResult.layout_partitions) — neighbor sets are a "
+                    "function of the layout"
+                )
+            # rebuild the fit's layout bit-for-bit: hash-partition on id +
+            # in-partition sort is a pure function of (data, partition count)
+            pts = pts.repartition(layout_partitions, "id").sortWithinPartitions("id")
+            pairs = knn_pairs_partition_local(pts, knn_l)
+        elif knn_mode == "exact":
+            # spread the CPU-bound exact kNN + multi-solution assignment
+            # kernels: a small parquet corpus arrives as one scan partition,
+            # which would serialize the quadratic work (results are
+            # layout-independent; the grouped sums absorb reorder noise well
+            # below the oracle rounding)
+            dp = pts.sparkSession.sparkContext.defaultParallelism
+            pts = pts.repartition(dp, "id")
+            pairs = knn_pairs_exact(pts, knn_l, n_rows=n_rows, exact_math=True)
+        else:
+            raise ValueError(f"unknown rescore knn_mode: {knn_mode}")
+        # the laid-out points feed THREE jobs (the kNN collect, the
+        # assignment kernel and the pair kernel) — persist the layout once
+        # so each consumer reads the cache instead of re-running the parquet
+        # scan + repartition (2 scans + 2 exchanges removed; kernel rows are
+        # row-independent, so values are unchanged).
+        pts = track(pts.persist())
+        asg = track(assign_all_solutions(pts, stack, exact_math=True).persist())
         dev_rows = asg.groupBy("solution").agg(F.sum("dist").alias("dev")).collect()
         a = asg.select("id", "solution", F.col("cluster").alias("c_i"))
         b = asg.select(
@@ -108,9 +110,6 @@ def rescore_archive(
             )
             .collect()
         )
-    finally:
-        asg.unpersist()
-        pts.unpersist()
     _note_rescore_phase(time.time() - t0)
     dev = {r["solution"]: r["dev"] for r in dev_rows}
     conn = {r["solution"]: r["conn"] for r in conn_rows}
@@ -118,16 +117,14 @@ def rescore_archive(
 
 
 def _note_rescore_phase(wall: float) -> None:
-    """Record the rescore wall into the engine's LAST_FIT_PHASES so the
-    bench's fit+rescore entries (mopso_fit, mopso_fit_full,
-    mopso_fit_lineitem) self-adjudicate their composition (VERDICT r16
-    #7): the fit just populated the dict, the rescore runs after it, so
-    appending here keeps setup/iter_loop/rescore in one artifact.
-    Lazy import — engine does not import rescore, but stay cycle-proof."""
-    from mopso_engine.engine import LAST_FIT_PHASES
-
-    if LAST_FIT_PHASES:
-        LAST_FIT_PHASES["rescore"] = round(wall, 3)
+    """Record the rescore wall next to the fit's phases in
+    :data:`mopso_engine.scope.PHASES`, so the bench's fit+rescore
+    entries (mopso_fit, mopso_fit_full, mopso_fit_lineitem)
+    self-adjudicate their composition (VERDICT r16 #7). Only a fit in
+    the same query scope leaves phases to add to; a rescore after a
+    fit in an earlier scope records nothing."""
+    if PHASES:
+        PHASES["rescore"] = round(wall, 3)
 
 
 def rescore_dev(pts: DataFrame, positions: list[np.ndarray]) -> list[tuple[int, float]]:

@@ -8,11 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from mopso_engine.ext.calib import (
-    clear_calib_caches,
     isotonic_calibrate,
     pava_fit,
     rate_micro,
 )
+from mopso_engine.scope import query_scope
 
 
 def _reference_pava(rows):
@@ -88,10 +88,11 @@ class TestIsotonicCalibrate:
             for i in range(50):
                 rows.append((b, 1 if random.random() < r else 0))
         df = spark.createDataFrame(rows, "vb long, y int")
-        out = {
-            r["bucket"]: (r["n"], r["positives"], r["raw_micro"], r["iso_micro"])
-            for r in isotonic_calibrate(df, "vb", "y").collect()
-        }
+        with query_scope():
+            out = {
+                r["bucket"]: (r["n"], r["positives"], r["raw_micro"], r["iso_micro"])
+                for r in isotonic_calibrate(df, "vb", "y").collect()
+            }
         # exact python replay of the aggregation + shared pava
         from collections import Counter
 
@@ -104,7 +105,6 @@ class TestIsotonicCalibrate:
         assert out == want
         iso = [v[3] for _, v in sorted(out.items())]
         assert iso == sorted(iso)  # the monotone contract
-        clear_calib_caches()
 
 
 class TestWoeIv:
@@ -168,13 +168,13 @@ class TestWoeIv:
         # ensure both classes per category for the fixture
         rows += [(c, 0) for c in "abcd"] + [(c, 1) for c in "abcd"]
         df = spark.createDataFrame(rows, "cat string, y int")
-        out = {
-            r["category"]: (r["n"], r["pos"], r["woe_micro"], r["iv_micro"])
-            for r in woe_iv_encode(df, "cat", "y").collect()
-        }
+        with query_scope():
+            out = {
+                r["category"]: (r["n"], r["pos"], r["woe_micro"], r["iv_micro"])
+                for r in woe_iv_encode(df, "cat", "y").collect()
+            }
         n = Counter(c for c, _ in rows)
         p = Counter(c for c, y in rows if y)
         fit = woe_iv_fit([(c, n[c], p[c]) for c in n])
         want = {c: (n[c], p[c], fit[c][0], fit[c][1]) for c in n}
         assert out == want
-        clear_calib_caches()

@@ -10,11 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from mopso_engine.ext.dsir import (
-    clear_dsir_caches,
     dsir_log_ratio_micro,
     dsir_topk,
     dsir_weights,
 )
+from mopso_engine.scope import query_scope
 
 # two "domains": target docs talk about joins/scans, the rest about
 # weather/cooking; doc 6 is a non-target doc written in target language
@@ -65,11 +65,10 @@ class TestDsirWeights:
             [(d, t) for d, t, _ in CORPUS], "doc_id long, text string"
         )
         target_ids = [d for d, _, it in CORPUS if it]
-        rows = dsir_weights(
-            docs, F.col("doc_id").isin(target_ids), n_buckets=64
-        ).collect()
-        clear_dsir_caches()
-        return rows
+        with query_scope():
+            return dsir_weights(
+                docs, F.col("doc_id").isin(target_ids), n_buckets=64
+            ).collect()
 
     def test_matches_python_replay_exactly(self, result):
         want = replay(CORPUS)
@@ -90,10 +89,10 @@ class TestDsirWeights:
             [(d, t) for d, t, _ in CORPUS], "doc_id long, text string"
         )
         target_ids = [d for d, _, it in CORPUS if it]
-        out = dsir_topk(
-            docs, F.col("doc_id").isin(target_ids), top_k=3, n_buckets=64
-        ).collect()
-        clear_dsir_caches()
+        with query_scope():
+            out = dsir_topk(
+                docs, F.col("doc_id").isin(target_ids), top_k=3, n_buckets=64
+            ).collect()
         assert [r["rk"] for r in out] == [1, 2, 3]
         assert all(r["doc_id"] not in target_ids for r in out)
         assert out[0]["doc_id"] == 6  # the lookalike wins

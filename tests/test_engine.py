@@ -284,25 +284,60 @@ def test_early_stop_streak_survives_resume(blobs_df, tmp_path, monkeypatch):
     assert resumed.iterations == 5  # not 6: the pre-interrupt streak counted
 
 
-def test_fit_releases_persisted_tables_when_it_raises(spark, blobs_df, monkeypatch):
-    """fit persists its points and neighbor tables; a fit that raises
-    part-way must still unpersist both."""
+@pytest.mark.parametrize("raises", [False, True], ids=["returns", "raises"])
+@pytest.mark.parametrize("call", ["fit", "rescore_archive", "evaluate"])
+def test_call_releases_persisted_tables(spark, blobs_df, monkeypatch, call, raises):
+    """fit, rescore_archive and evaluate persist (and, in exact kNN mode,
+    broadcast) inside their own query scope: whether they return or raise
+    part-way, the persisted-RDD set is left as it was and nothing stays
+    tracked. Each case patches a function the call reaches once its
+    tables are cached; the patch checks they are, then raises or passes."""
+    from pyspark.sql import functions as F
+
     import mopso_engine.engine as eng_mod
+    import mopso_engine.metrics as metrics_mod
+    import mopso_engine.rescore as rescore_mod
+    from mopso_engine import scope
 
     def persisted() -> set:
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    blobs_df.count()  # the session fixture's own cache is not the fit's
-    before = persisted()
-    held_during_fit = []
-
-    def failing_fitness(nbr, positions, **kw):
-        held_during_fit.append(persisted() - before)
-        raise RuntimeError("fitness pass failed")
-
-    monkeypatch.setattr(eng_mod, "evaluate_solutions", failing_fitness)
+    # a plan of its own: fit's (id, features, label) projection of the
+    # cached fixture itself would share, and release, the fixture's cache
+    points = blobs_df.where(F.col("id") >= 0)
     cfg = MopsoConfig(n_particles=4, iter_max=2, knn_l=5, seed=3, init_sample_size=300)
-    with pytest.raises(RuntimeError, match="fitness pass failed"):
-        MopsoEngine(cfg).fit(blobs_df)
-    assert len(held_during_fit[0]) >= 2  # points + neighbor tables were cached
+    engine = MopsoEngine(cfg)
+    res = engine.fit(points) if call != "fit" else None
+    owner, attr = {
+        "fit": (eng_mod, "evaluate_solutions"),
+        "rescore_archive": (rescore_mod, "assign_all_solutions"),
+        "evaluate": (metrics_mod, "inertia"),
+    }[call]
+    real = getattr(owner, attr)
+    blobs_df.count()  # the session fixture's own cache is not the call's
+    before = persisted()
+    held_during_call = []
+
+    def patched(df, *args, **kwargs):
+        df.count()  # the table the call hands on is cached by now
+        held_during_call.append(persisted() - before)
+        if raises:
+            raise RuntimeError("injected failure")
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(owner, attr, patched)
+    run = {
+        "fit": lambda: engine.fit(points),
+        "rescore_archive": lambda: rescore_mod.rescore_archive(
+            points, res.archive_positions, cfg.knn_l, n_rows=res.n_points
+        ),
+        "evaluate": lambda: engine.evaluate(points, res),
+    }[call]
+    if raises:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run()
+    else:
+        run()
+    assert held_during_call and len(held_during_call[0]) >= (2 if call == "fit" else 1)
     assert persisted() == before
+    assert scope._open == []

@@ -2806,52 +2806,59 @@ class TestBloomPrefilter:
         (the expression path's conv() is case-insensitive, so UPPERCASE
         hex must probe the same bits), must RAISE on non-32-char or
         non-hex fingerprints instead of silently probing wrong bits,
-        and must register every broadcast it creates in the registry
-        :func:`clear_bloom_broadcasts` drains."""
+        and must track every broadcast it creates, so the query scope
+        destroys them."""
+        from pyspark import Broadcast
+
+        from mopso_engine.scope import _open, query_scope
+
         m = 62 * 64
         fps = docs.select(F.md5(dd.normalized_text()).alias("fp")).distinct()
         words = dd.bloom_words_local(dd.bloom_build(fps, m_bits=m), m)
-        dd.clear_bloom_broadcasts()  # isolate this test's accounting
-        probe_in = docs.select(
-            "doc_id", F.md5(dd.normalized_text()).alias("fp")
-        )
-        lower = {
-            r["doc_id"]: r["m"]
-            for r in probe_in.withColumn(
-                "m", dd.bloom_maybe_kernel(spark, words, m_bits=m)(F.col("fp"))
-            ).collect()
-        }
-        upper_in = probe_in.withColumn("fp", F.upper("fp"))
-        upper_kern = {
-            r["doc_id"]: r["m"]
-            for r in upper_in.withColumn(
-                "m", dd.bloom_maybe_kernel(spark, words, m_bits=m)(F.col("fp"))
-            ).collect()
-        }
-        upper_expr = {
-            r["doc_id"]: r["m"]
-            for r in upper_in.withColumn(
-                "m", dd.bloom_maybe_col(F.col("fp"), words, m_bits=m)
-            ).collect()
-        }
-        assert lower == upper_kern == upper_expr
-        for bad, msg in (
-            ("deadbeef", "32 hex"),
-            ("z" * 32, "non-hex"),
-        ):
-            bad_df = spark.createDataFrame(
-                [(1, bad)], "doc_id long, fp string"
+        with query_scope() as held:
+            probe_in = docs.select(
+                "doc_id", F.md5(dd.normalized_text()).alias("fp")
             )
-            with pytest.raises(Exception, match=msg):
-                bad_df.withColumn(
-                    "m",
-                    dd.bloom_maybe_kernel(spark, words, m_bits=m)(
-                        F.col("fp")
-                    ),
+            lower = {
+                r["doc_id"]: r["m"]
+                for r in probe_in.withColumn(
+                    "m", dd.bloom_maybe_kernel(spark, words, m_bits=m)(F.col("fp"))
                 ).collect()
-        # 4 kernels built above → 4 registered broadcasts, drained once
-        assert dd.clear_bloom_broadcasts() == 4
-        assert dd.clear_bloom_broadcasts() == 0
+            }
+            upper_in = probe_in.withColumn("fp", F.upper("fp"))
+            upper_kern = {
+                r["doc_id"]: r["m"]
+                for r in upper_in.withColumn(
+                    "m", dd.bloom_maybe_kernel(spark, words, m_bits=m)(F.col("fp"))
+                ).collect()
+            }
+            upper_expr = {
+                r["doc_id"]: r["m"]
+                for r in upper_in.withColumn(
+                    "m", dd.bloom_maybe_col(F.col("fp"), words, m_bits=m)
+                ).collect()
+            }
+            assert lower == upper_kern == upper_expr
+            for bad, msg in (
+                ("deadbeef", "32 hex"),
+                ("z" * 32, "non-hex"),
+            ):
+                bad_df = spark.createDataFrame(
+                    [(1, bad)], "doc_id long, fp string"
+                )
+                with pytest.raises(Exception, match=msg):
+                    bad_df.withColumn(
+                        "m",
+                        dd.bloom_maybe_kernel(spark, words, m_bits=m)(
+                            F.col("fp")
+                        ),
+                    ).collect()
+            # 4 kernels built above → 4 tracked broadcasts
+            bcs = [o for o in held if isinstance(o, Broadcast)]
+            assert len(held) == len(bcs) == 4
+        # the scope destroyed all four and left nothing tracked
+        assert not any(bc._jbroadcast.isValid() for bc in bcs)
+        assert _open == []
 
 
 class TestPerplexityBuckets:

@@ -140,17 +140,17 @@ def test_pagerank_iteration_plan_has_one_live_exchange(spark):
 
 
 def test_pagerank_unpersists_internals_and_registry_clears(spark):
-    from mopso_engine.ext.graph import clear_pagerank_caches
+    from mopso_engine.scope import query_scope
 
     jsc = spark.sparkContext._jsc.sc()
-    clear_pagerank_caches()
     base = jsc.getPersistentRDDs().size()
     df = spark.createDataFrame(FIXTURE, "src long, dst long")
-    out = pagerank(df, iters=2)
-    assert out.count() == 8
-    # only the returned rank vector remains cached
-    assert jsc.getPersistentRDDs().size() == base + 1
-    assert clear_pagerank_caches() >= 1
+    with query_scope():
+        out = pagerank(df, iters=2)
+        assert out.count() == 8
+        # only the returned rank vector remains cached
+        assert jsc.getPersistentRDDs().size() == base + 1
+    # the scope released it
     assert jsc.getPersistentRDDs().size() == base
 
 
@@ -419,7 +419,8 @@ class TestBfsLevels:
     def test_matches_python_replay_on_path_and_unreached(self, spark):
         from collections import deque
 
-        from mopso_engine.ext.graph import bfs_levels, clear_pagerank_caches
+        from mopso_engine.ext.graph import bfs_levels
+        from mopso_engine.scope import query_scope
 
         # chain 1->2->3->4->5->6->7 (directed), a shortcut 1->4, a
         # 2-node island {100->101}, and a duplicate + null edge to drop
@@ -428,10 +429,11 @@ class TestBfsLevels:
             (1, 4), (1, 2), (100, 101), (None, 9),
         ]
         df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            r["node"]: r["dist"]
-            for r in bfs_levels(df, [1], iters=6).collect()
-        }
+        with query_scope():
+            got = {
+                r["node"]: r["dist"]
+                for r in bfs_levels(df, [1], iters=6).collect()
+            }
         adj = {}
         for s, d in edges:
             if s is not None and d is not None:
@@ -448,20 +450,20 @@ class TestBfsLevels:
         assert got == want
         assert got[4] == 1  # direct shortcut wins over the 3-hop chain
         assert got[100] is None and got[101] is None  # island unreached
-        clear_pagerank_caches()
 
     def test_multi_source_takes_nearest_seed(self, spark):
-        from mopso_engine.ext.graph import bfs_levels, clear_pagerank_caches
+        from mopso_engine.ext.graph import bfs_levels
+        from mopso_engine.scope import query_scope
 
         df = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (10, 4)], "src long, dst long"
         )
-        got = {
-            r["node"]: r["dist"]
-            for r in bfs_levels(df, [1, 10], iters=4).collect()
-        }
+        with query_scope():
+            got = {
+                r["node"]: r["dist"]
+                for r in bfs_levels(df, [1, 10], iters=4).collect()
+            }
         assert got == {1: 0, 10: 0, 2: 1, 4: 1, 3: 2}
-        clear_pagerank_caches()
 
     def test_guards(self, spark):
         from mopso_engine.ext.graph import bfs_levels
@@ -477,28 +479,25 @@ class TestBfsLevels:
 
 def test_graph_phase_telemetry_covers_all_rounds(spark):
     """VERDICT r11 #2: pagerank and bfs_levels report a setup/blocks
-    wall decomposition through LAST_GRAPH_PHASES so a slow bench entry
-    self-adjudicates. The blocks must tile the whole loop: one entry
+    wall decomposition through the query scope's PHASES so a slow bench
+    entry self-adjudicates. The blocks must tile the whole loop: one entry
     per materialization, the last one at the final executed round."""
-    from mopso_engine.ext.graph import (
-        LAST_GRAPH_PHASES,
-        bfs_levels,
-        clear_pagerank_caches,
-        pagerank,
-    )
+    from mopso_engine.ext.graph import bfs_levels, pagerank
+    from mopso_engine.scope import PHASES, query_scope
 
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 1)], "src long, dst long"
     )
-    bfs_levels(df, [1], iters=6, materialize_every=3).collect()
-    ph = dict(LAST_GRAPH_PHASES)
+    with query_scope():
+        bfs_levels(df, [1], iters=6, materialize_every=3).collect()
+    ph = dict(PHASES)
     assert ph["op"] == "bfs_levels" and ph["setup"] >= 0
     assert [b["through_round"] for b in ph["blocks"]] == [3, 6]
     assert ph["n_rounds_run"] == 6
 
-    pagerank(df, iters=6, materialize_every=3).collect()
-    ph = dict(LAST_GRAPH_PHASES)
+    with query_scope():
+        pagerank(df, iters=6, materialize_every=3).collect()
+    ph = dict(PHASES)
     assert ph["op"] == "pagerank"
     assert [b["through_iter"] for b in ph["blocks"]] == [3, 6]
     assert ph["n_iters_run"] == 6
-    clear_pagerank_caches()

@@ -141,31 +141,19 @@ def main():
     names = list(qs) if not args.only else args.only.split(",")
 
     failures = []
-    from mopso_engine.ext.calib import clear_calib_caches
-    from mopso_engine.ext.dedup import clear_bloom_broadcasts
-    from mopso_engine.ext.dsir import clear_dsir_caches
-    from mopso_engine.ext.graph import clear_pagerank_caches
-    from mopso_engine.ext.retrieval import clear_retrieval_caches
-    from mopso_engine.ext.simsearch import clear_sim_caches
+    from mopso_engine.scope import query_scope
 
     for name in names:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, args.sf).toPandas()
+            # the scope releases what the query persisted or broadcast, so
+            # a 270-query sweep does not accumulate storage
+            with query_scope():
+                sdf = qs[name](spark, args.sf).toPandas()
         except Exception:
             print(f"✗ {name}: SPARK ERROR\n{traceback.format_exc()}")
             failures.append(name)
             continue
-        finally:
-            # release query-lifetime executor caches (the pagerank family
-            # persists its final rank vector; bm25 persists its pruned tf
-            # table) so a 190-query sweep does not accumulate storage
-            clear_pagerank_caches()
-            clear_retrieval_caches()
-            clear_dsir_caches()
-            clear_calib_caches()
-            clear_bloom_broadcasts()
-            clear_sim_caches()
         if name not in oracles:
             print(f"~ {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
             if len(sdf) == 0:

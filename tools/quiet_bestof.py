@@ -2,9 +2,9 @@
 VERDICT r12 #4 / r13 #3,#6): fresh session, the bench warmups, then per
 query 5 warm attempts with the micro spark calib adjacent to EVERY
 attempt — the artifact carries the in-run host-speed track so a noisy
-attempt self-adjudicates. Query-lifetime caches are cleared between
-attempts exactly as bench.py's run_once does, so attempt 2+ never reads
-a prior attempt's persisted tables.
+attempt self-adjudicates. Each attempt runs in its own query scope,
+exactly as bench.py's run_once does, so attempt 2+ never reads a prior
+attempt's persisted tables.
 
 Usage: python tools/quiet_bestof.py name1,name2 [out.json]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -45,12 +45,7 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
 
-    from mopso_engine.ext.calib import clear_calib_caches
-    from mopso_engine.ext.dedup import clear_bloom_broadcasts, clear_shingle_caches
-    from mopso_engine.ext.dsir import clear_dsir_caches
-    from mopso_engine.ext.graph import clear_pagerank_caches
-    from mopso_engine.ext.retrieval import clear_retrieval_caches
-    from mopso_engine.ext.simsearch import clear_sim_caches
+    from mopso_engine.scope import query_scope
 
     _cpu_calibration(), _spark_calibration(spark), _micro_spark_calibration(spark)
     res: dict = {
@@ -65,19 +60,11 @@ def main() -> None:
         for _ in range(5):
             calibs.append(_micro_spark_calibration(spark))
             t0 = time.time()
-            try:
+            with query_scope():
                 qs[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 attempts.append(round(time.time() - t0, 3))
-            finally:
-                clear_shingle_caches()
-                clear_pagerank_caches()
-                clear_retrieval_caches()
-                clear_dsir_caches()
-                clear_calib_caches()
-                clear_bloom_broadcasts()
-                clear_sim_caches()
         calibs.append(_micro_spark_calibration(spark))
         res["queries"][name] = {
             "attempts": attempts,

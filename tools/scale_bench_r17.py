@@ -144,15 +144,7 @@ def main() -> None:
     )
 
     import __spark_entry__ as entry_mod
-    from mopso_engine.engine import LAST_FIT_PHASES
-    from mopso_engine.ext.calib import clear_calib_caches
-    from mopso_engine.ext.dedup import (
-        clear_bloom_broadcasts,
-        clear_shingle_caches,
-    )
-    from mopso_engine.ext.dsir import clear_dsir_caches
-    from mopso_engine.ext.graph import LAST_GRAPH_PHASES, clear_pagerank_caches
-    from mopso_engine.ext.retrieval import clear_retrieval_caches
+    from mopso_engine.scope import PHASES, query_scope
 
     sf_dir = OUT
     spark.range(1000).repartition(args.cpus).mapInPandas(
@@ -190,16 +182,10 @@ def main() -> None:
 
     def run_once(name: str) -> float:
         t0 = time.time()
-        try:
+        with query_scope():
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return round(time.time() - t0, 3)
-        finally:
-            clear_shingle_caches()
-            clear_pagerank_caches()
-            clear_retrieval_caches()
-            clear_dsir_caches()
-            clear_calib_caches()
-            clear_bloom_broadcasts()
+            t = round(time.time() - t0, 3)
+        return t
 
     only = set(args.only.split(",")) if args.only else None
     for name, attempts in QUERIES:
@@ -214,12 +200,12 @@ def main() -> None:
                 rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
                 break
             rec["attempts"].append(t)
-            if name.startswith("mopso_fit") and LAST_FIT_PHASES:
-                rec["phases"] = dict(LAST_FIT_PHASES)
-            if name.startswith("supplier_") and LAST_GRAPH_PHASES:
+            if name.startswith("mopso_fit") and PHASES:
+                rec["phases"] = dict(PHASES)
+            if name.startswith("supplier_") and PHASES:
                 rec["phases"] = {
                     k: (list(v) if isinstance(v, list) else v)
-                    for k, v in LAST_GRAPH_PHASES.items()
+                    for k, v in PHASES.items()
                 }
         rec["micro_calibs"].append(_micro_spark_calibration(spark))
         if rec["attempts"]:

@@ -187,8 +187,7 @@ def main_x100(names: list[str]) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry_mod
 
-    from mopso_engine.ext.dedup import clear_shingle_caches
-    from mopso_engine.ext.graph import clear_pagerank_caches
+    from mopso_engine.scope import query_scope
 
     TABLES_OF = {
         "corpus_curation_v3": {"documents"},
@@ -231,17 +230,15 @@ def main_x100(names: list[str]) -> None:
     out: dict = {"metric": "scale100_smoke", "queries": names}
     for name in names:
         # warm pass eats codegen/JIT so no timed pass is charged for it
-        qs[name](spark, SRC).write.format("noop").mode("overwrite").save()
-        clear_shingle_caches()
-        clear_pagerank_caches()
+        with query_scope():
+            qs[name](spark, SRC).write.format("noop").mode("overwrite").save()
         rec = {}
         for tag, d, mult in (("x1", SRC, 1), ("x10", OUT, 10), ("x100", OUT100, 100)):
             snap0 = stage_writes(spark)
             t0 = time.time()
-            qs[name](spark, d).write.format("noop").mode("overwrite").save()
-            t = round(time.time() - t0, 3)
-            clear_shingle_caches()
-            clear_pagerank_caches()
+            with query_scope():
+                qs[name](spark, d).write.format("noop").mode("overwrite").save()
+                t = round(time.time() - t0, 3)
             tot, peak, nst = window_stats(snap0, stage_writes(spark))
             rec[tag] = {
                 "scale": mult, "wall_sec": t, "shuffle_write_bytes": tot,
@@ -303,31 +300,31 @@ def main_x100_lsh() -> None:
     from pyspark.sql import functions as F
 
     from mopso_engine.ext import dedup as dd
-    from mopso_engine.ext.dedup import clear_shingle_caches
+    from mopso_engine.scope import query_scope
 
     build_corpus_lsh(spark, 10, OUT_LSH)
     build_corpus_lsh(spark, 100, OUT100_LSH)
     qs = entry_mod.queries()
     out: dict = {"metric": "scale100_lsh_smoke", "query": "dedup_verified"}
     # warm pass eats codegen/JIT so no timed pass is charged for it
-    qs["dedup_verified"](spark, SRC).write.format("noop").mode("overwrite").save()
-    clear_shingle_caches()
+    with query_scope():
+        qs["dedup_verified"](spark, SRC).write.format("noop").mode("overwrite").save()
     for tag, d, mult in (("x1", SRC, 1), ("x10", OUT_LSH, 10), ("x100", OUT100_LSH, 100)):
         snap0 = stage_writes(spark)
         t0 = time.time()
-        qs["dedup_verified"](spark, d).write.format("noop").mode("overwrite").save()
-        t = round(time.time() - t0, 3)
-        clear_shingle_caches()
+        with query_scope():
+            qs["dedup_verified"](spark, d).write.format("noop").mode("overwrite").save()
+            t = round(time.time() - t0, 3)
         tot, peak, nst = window_stats(snap0, stage_writes(spark))
         # the work-law readout (untimed second pass): sum(n_bands) over
         # candidate pairs == Σ_{band,bucket} C(bucket_size, 2)
         docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
-        cands = dd.minhash_lsh_candidates(docs, k=3, num_hashes=16, bands=4)
-        law = cands.agg(
-            F.coalesce(F.sum("n_bands"), F.lit(0)).alias("work"),
-            F.count(F.lit(1)).alias("pairs"),
-        ).collect()[0]
-        clear_shingle_caches()
+        with query_scope():
+            cands = dd.minhash_lsh_candidates(docs, k=3, num_hashes=16, bands=4)
+            law = cands.agg(
+                F.coalesce(F.sum("n_bands"), F.lit(0)).alias("work"),
+                F.count(F.lit(1)).alias("pairs"),
+            ).collect()[0]
         rec = {
             "scale": mult, "wall_sec": t, "shuffle_write_bytes": tot,
             "peak_stage_shuffle_bytes": peak, "stages": nst,
@@ -392,23 +389,24 @@ def main_x100_bm25() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry_mod
 
-    from mopso_engine.ext.retrieval import clear_retrieval_caches, pruned_tf
+    from mopso_engine.ext.retrieval import pruned_tf
+    from mopso_engine.scope import query_scope
 
     build_docs_xn(spark, 10, OUT_BM25)
     build_docs_xn(spark, 100, OUT100_BM25)
     qs = entry_mod.queries()
     out: dict = {"metric": "scale100_bm25_smoke", "query": "bm25_search"}
     # warm pass eats codegen/JIT so no timed pass is charged for it
-    qs["bm25_search"](spark, SRC).write.format("noop").mode("overwrite").save()
-    clear_retrieval_caches()
+    with query_scope():
+        qs["bm25_search"](spark, SRC).write.format("noop").mode("overwrite").save()
     for tag, d, mult in (
         ("x1", SRC, 1), ("x10", OUT_BM25, 10), ("x100", OUT100_BM25, 100)
     ):
         snap0 = stage_writes(spark)
         t0 = time.time()
-        qs["bm25_search"](spark, d).write.format("noop").mode("overwrite").save()
-        t = round(time.time() - t0, 3)
-        clear_retrieval_caches()
+        with query_scope():
+            qs["bm25_search"](spark, d).write.format("noop").mode("overwrite").save()
+            t = round(time.time() - t0, 3)
         tot, peak, nst = window_stats(snap0, stage_writes(spark))
         # the work-law readout (untimed second pass): pruned-tf rows =
         # Σ_term docs-containing-term (the ONLY corpus-scale shuffle's
@@ -422,10 +420,10 @@ def main_x100_bm25() -> None:
             ],
             "query_id string, qtext string",
         )
-        tf = pruned_tf(docs, qdf).df
-        tf_rows = tf.count()
-        df_rows = tf.select("term").distinct().count()
-        clear_retrieval_caches()
+        with query_scope():
+            tf = pruned_tf(docs, qdf).df
+            tf_rows = tf.count()
+            df_rows = tf.select("term").distinct().count()
         rec = {
             "scale": mult, "wall_sec": t, "shuffle_write_bytes": tot,
             "peak_stage_shuffle_bytes": peak, "stages": nst,
@@ -465,20 +463,16 @@ def main_x100_rerank() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry_mod
 
-    from mopso_engine.ext.retrieval import (
-        bm25_topk,
-        clear_retrieval_caches,
-        pruned_tf,
-        term_coverage_topk,
-    )
+    from mopso_engine.ext.retrieval import bm25_topk, pruned_tf, term_coverage_topk
+    from mopso_engine.scope import query_scope
 
     build_docs_xn(spark, 10, OUT_BM25)
     build_docs_xn(spark, 100, OUT100_BM25)
     qs = entry_mod.queries()
     out: dict = {"metric": "scale100_rerank_smoke", "query": "hybrid_rerank"}
     # warm pass eats codegen/JIT so no timed pass is charged for it
-    qs["hybrid_rerank"](spark, SRC).write.format("noop").mode("overwrite").save()
-    clear_retrieval_caches()
+    with query_scope():
+        qs["hybrid_rerank"](spark, SRC).write.format("noop").mode("overwrite").save()
     qdf_rows = [
         ("q_hashjoin", "hash join scan"),
         ("q_stream", "stream window watermark"),
@@ -489,24 +483,24 @@ def main_x100_rerank() -> None:
     ):
         snap0 = stage_writes(spark)
         t0 = time.time()
-        qs["hybrid_rerank"](spark, d).write.format("noop").mode("overwrite").save()
-        t = round(time.time() - t0, 3)
-        clear_retrieval_caches()
+        with query_scope():
+            qs["hybrid_rerank"](spark, d).write.format("noop").mode("overwrite").save()
+            t = round(time.time() - t0, 3)
         tot, peak, nst = window_stats(snap0, stage_writes(spark))
         # the work-law readout (untimed second pass): candidate pairs
         # and distinct candidate docs — the rerank stage's own input,
         # which must be top-k-bounded, never corpus-bounded
         docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
         qdf = spark.createDataFrame(qdf_rows, "query_id string, qtext string")
-        tf = pruned_tf(docs, qdf)
-        bm = bm25_topk(docs, qdf, k1=1.2, b=0.75, top_k=20, tf=tf)
-        cov = term_coverage_topk(docs, qdf, top_k=20, tf=tf)
-        cand = bm.select("query_id", "doc_id").unionByName(
-            cov.select("query_id", "doc_id")
-        ).distinct()
-        n_pairs = cand.count()
-        n_docs_cand = cand.select("doc_id").distinct().count()
-        clear_retrieval_caches()
+        with query_scope():
+            tf = pruned_tf(docs, qdf)
+            bm = bm25_topk(docs, qdf, k1=1.2, b=0.75, top_k=20, tf=tf)
+            cov = term_coverage_topk(docs, qdf, top_k=20, tf=tf)
+            cand = bm.select("query_id", "doc_id").unionByName(
+                cov.select("query_id", "doc_id")
+            ).distinct()
+            n_pairs = cand.count()
+            n_docs_cand = cand.select("doc_id").distinct().count()
         rec = {
             "scale": mult, "wall_sec": t, "shuffle_write_bytes": tot,
             "peak_stage_shuffle_bytes": peak, "stages": nst,
@@ -927,7 +921,7 @@ def main_x100_markov() -> None:
     import __spark_entry__ as entry_mod
     from pyspark.sql import functions as F
 
-    from mopso_engine.ext.calib import clear_calib_caches
+    from mopso_engine.scope import query_scope
 
     build_events_users_xn(spark, 10, OUT_ATTR)
     build_events_users_xn(spark, 100, OUT100_ATTR)
@@ -937,19 +931,19 @@ def main_x100_markov() -> None:
         "query": "events_attribution_markov",
     }
     # warm pass eats codegen/JIT so no timed pass is charged for it
-    qs["events_attribution_markov"](spark, SRC).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    clear_calib_caches()
+    with query_scope():
+        qs["events_attribution_markov"](spark, SRC).write.format("noop").mode(
+            "overwrite"
+        ).save()
     vexpr = "CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)"
     for tag, d, mult in (
         ("x1", SRC, 1), ("x10", OUT_ATTR, 10), ("x100", OUT100_ATTR, 100)
     ):
         snap0 = stage_writes(spark)
         t0 = time.time()
-        res = qs["events_attribution_markov"](spark, d).collect()
-        t = round(time.time() - t0, 3)
-        clear_calib_caches()
+        with query_scope():
+            res = qs["events_attribution_markov"](spark, d).collect()
+            t = round(time.time() - t0, 3)
         tot, peak, nst = window_stats(snap0, stage_writes(spark))
         from mopso_engine.ext.streaming import read_events
 
@@ -1274,34 +1268,37 @@ def main_x100_bloom() -> None:
         ).distinct()
         return dd.incremental_dedup_bloom(new, known_fps, m_bits=m_bits), known_fps
 
+    from mopso_engine.scope import query_scope
+
     # warm pass eats codegen/JIT so no timed pass is charged for it
-    run(SRC, 62 * 512)[0].write.format("noop").mode("overwrite").save()
+    with query_scope():
+        run(SRC, 62 * 512)[0].write.format("noop").mode("overwrite").save()
     for tag, d, mult in (
         ("x1", SRC, 1), ("x10", OUT_LSH, 10), ("x100", OUT100_LSH, 100)
     ):
         m_bits = 62 * 512 * mult
         snap0 = stage_writes(spark)
         t0 = time.time()
-        res, known_fps = run(d, m_bits)
-        res.write.format("noop").mode("overwrite").save()
-        t = round(time.time() - t0, 3)
-        tot, peak, nst = window_stats(snap0, stage_writes(spark))
-        # work-law readout (untimed second pass): the decision table's
-        # own counters ARE the law — maybe rows (the semi-join's probe
-        # side), true dups, false positives over genuinely-new rows
-        res2, known_fps2 = run(d, m_bits)
-        law = res2.agg(
-            F.count(F.lit(1)).alias("increment"),
-            F.sum(F.col("maybe_known").cast("long")).alias("maybe"),
-            F.sum(F.col("is_known").cast("long")).alias("dups"),
-            F.sum(
-                (F.col("maybe_known") & ~F.col("is_known")).cast("long")
-            ).alias("fp"),
-        ).collect()[0]
-        n_index = known_fps2.count()
-        # both probing DataFrames are consumed — release the decade's
-        # broadcast word arrays (the ADVICE r15 lifecycle contract)
-        dd.clear_bloom_broadcasts()
+        # one scope per decade: it destroys the decade's broadcast word
+        # arrays once both probing DataFrames below are consumed
+        with query_scope():
+            res, known_fps = run(d, m_bits)
+            res.write.format("noop").mode("overwrite").save()
+            t = round(time.time() - t0, 3)
+            tot, peak, nst = window_stats(snap0, stage_writes(spark))
+            # work-law readout (untimed second pass): the decision table's
+            # own counters ARE the law — maybe rows (the semi-join's probe
+            # side), true dups, false positives over genuinely-new rows
+            res2, known_fps2 = run(d, m_bits)
+            law = res2.agg(
+                F.count(F.lit(1)).alias("increment"),
+                F.sum(F.col("maybe_known").cast("long")).alias("maybe"),
+                F.sum(F.col("is_known").cast("long")).alias("dups"),
+                F.sum(
+                    (F.col("maybe_known") & ~F.col("is_known")).cast("long")
+                ).alias("fp"),
+            ).collect()[0]
+            n_index = known_fps2.count()
         genuinely_new = int(law["increment"]) - int(law["dups"])
         rec = {
             "scale": mult, "wall_sec": t, "shuffle_write_bytes": tot,
@@ -1528,8 +1525,7 @@ def main() -> None:
     # cold absolute number is not. A warm x1 pass first eats the
     # codegen/JIT cost so neither timed pass is charged for it.
     qs = entry_mod.queries()
-    from mopso_engine.ext.dedup import clear_shingle_caches
-    from mopso_engine.ext.graph import clear_pagerank_caches
+    from mopso_engine.scope import query_scope
 
     ROWS_IN = {
         "corpus_curation_v2": (5_000, 50_000),
@@ -1557,19 +1553,17 @@ def main() -> None:
         "training_epoch_mix", "supplier_pagerank", "supplier_bfs",
         "price_deciles", "customer_rfm", "docs_quality_qnorm",
     ):
-        qs[name](spark, SRC).write.format("noop").mode("overwrite").save()
-        clear_shingle_caches()
-        clear_pagerank_caches()
+        with query_scope():
+            qs[name](spark, SRC).write.format("noop").mode("overwrite").save()
         rec = {}
         for tag, d, rows in (
             ("x1", SRC, ROWS_IN[name][0]), ("x10", OUT, ROWS_IN[name][1])
         ):
             snap0 = stage_writes(spark)
             t0 = time.time()
-            qs[name](spark, d).write.format("noop").mode("overwrite").save()
-            t = round(time.time() - t0, 3)
-            clear_shingle_caches()
-            clear_pagerank_caches()
+            with query_scope():
+                qs[name](spark, d).write.format("noop").mode("overwrite").save()
+                t = round(time.time() - t0, 3)
             tot, peak, n = window_stats(snap0, stage_writes(spark))
             rec[tag] = {
                 "rows_in": rows, "wall_sec": t,
